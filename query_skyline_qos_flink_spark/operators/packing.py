@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .layout import range_bucket
+
 
 def ordered_cumsum(
     df: DataFrame,
@@ -49,20 +51,8 @@ def ordered_cumsum(
             )
         )
     )
-    # bucket id = number of boundaries strictly below order_col, as ONE
-    # parsed expression: the former lit-by-lit when().otherwise() chain
-    # cost ~4 py4j round trips per boundary (~150 trips at 32 ranges) and
-    # grew a 31-deep conditional Catalyst walks quadratically — the exact
-    # shape skyline.py's 2-D path and prefix._range_bucketed already
-    # replaced (round 16).  CAST-from-repr round-trips each double
-    # boundary exactly; ascending buckets preserved (__pid order ==
-    # order_col range order).
-    if bounds:
-        arr = ",".join(f"CAST('{float(b)!r}' AS DOUBLE)" for b in bounds)
-        pid = F.expr(f"size(filter(array({arr}), b -> b < `{order_col}`))")
-    else:
-        pid = F.lit(0)
-    ranged = df.withColumn("__pid", pid)
+    # ascending buckets: __pid order == order_col range order
+    ranged = df.withColumn("__pid", range_bucket(order_col, bounds))
     w = Window.partitionBy("__pid").orderBy(order_col)
     local = ranged.withColumn(
         "__lc", F.sum(val_col).over(w.rowsBetween(Window.unboundedPreceding, 0))

@@ -22,22 +22,31 @@ join: by shape.
   sorts all distinct d0 values) -> broadcast semi-join back.  Grouped:
   the prefix-min window partitions by the group keys (parallel by key).
 
-* **d >= 3 — two-phase with broadcast-verify merge.**
+* **d >= 3 — two-phase, one global-pass dispatch.**
   Phase 1 needs no shuffle at all: ``mapInPandas`` computes a local
   skyline per *input partition* (Arrow-batched, incremental), so only
-  local-skyline survivors ever hit the wire.  The merge then:
-  - tree-merges one round if survivors are huge (bounds any single task);
-  - **broadcast-verifies**: ship the survivor dim-matrix to every task and
-    drop dominated rows in parallel.  This replaces the reference's
-    single-threaded global BNL — the PDF's own bottleneck (§5.5) — with an
-    embarrassingly parallel pass, valid because every non-survivor is
-    dominated by some survivor (transitivity).
+  local-skyline survivors ever hit the wire.  The merge counts the
+  cached survivors (one tree-merge round first if they exceed
+  ``_VERIFY_MAX_ROWS``) and hands them to :func:`_verify`, the family's
+  one global pass, which picks the physical path by size:
+  - ``n <= _DRIVER_VERIFY_MAX_ROWS`` — collect once, finish on the
+    driver with the same kernel, re-enter as a local relation;
+  - ``n <= _VERIFY_MAX_ROWS`` — **broadcast-verify**: ship the survivor
+    dim-matrix to every task and drop dominated rows in parallel.  This
+    replaces the reference's single-threaded global BNL — the PDF's own
+    bottleneck (§5.5) — with an embarrassingly parallel pass, valid
+    because every non-survivor is dominated by some survivor
+    (transitivity);
+  - larger — chunked: one broadcast pass per ``_VERIFY_MAX_ROWS``-row
+    uniform chunk of the survivors.
+  The same dispatch finishes the k-skyband (and through it
+  top-dominating) with a dominator-count kernel, and the skycube's
+  full-space and per-subspace merges.
 
 At 100 TB: phase 1 parallelism = input splits; shuffle volume is
-``O(sum of local skyline sizes)``, not ``O(input)``; the broadcast is dims
-only (d doubles/row) and gated by ``_VERIFY_MAX_ROWS`` with a tree-merge
-fallback.  No driver-side collect of anything larger than the survivor
-dim-matrix.
+``O(sum of local skyline sizes)``, not ``O(input)``; every broadcast is
+dims only (d doubles/row) and at most ``_VERIFY_MAX_ROWS`` rows.  No
+driver-side collect of anything larger than the survivor dim-matrix.
 
 MAX dimensions are handled by negation; duplicates/ties are retained
 (SURVEY.md §1.1); rows with NULL/NaN in any skyline dimension are excluded
@@ -57,12 +66,21 @@ from .caching import persist_bounded as _persist
 from .caching import release_local_checkpoint
 from .fanout import fanout_narrow_scan as _fanout
 from .joins import null_safe_semi_join
-from .skyline_kernel import dominated_mask_vs_sorted, exact_f32, skyline_mask, sums_exact
+from .layout import range_bucket
+from .skyline_kernel import (
+    _count_dominators_vs,
+    dominance_planes,
+    dominated_mask_vs_sorted,
+    exact_f32,
+    skyline_mask,
+    sums_exact,
+)
 
 _PREP = "__sk_"
 
-# Max survivor rows for the broadcast-verify merge; above this, run a
-# tree-merge round first (and as a last resort a single-task merge).
+# Max candidate rows for one broadcast-verify pass (see _verify); above
+# this the skyline merge runs a tree-merge round first, and the verify
+# goes chunk by chunk.
 _VERIFY_MAX_ROWS = 400_000
 # Candidate sets at or below this row count finish DRIVER-side: the same
 # chunked numpy kernels the distributed verify broadcasts run once on the
@@ -74,8 +92,8 @@ _VERIFY_MAX_ROWS = 400_000
 # plus a python-worker broadcast pass per call — pure fixed latency at
 # bench scale and wasted scheduling at cluster scale (guide §1.2: remove
 # passes before tuning them).  Results are identical: same kernel, same
-# duplicate-retention policy (the skyline-merge monoid).  Larger sets keep
-# the existing broadcast / tree-merge / chunked paths unchanged.
+# duplicate-retention policy (the skyline-merge monoid).  Read only by
+# _verify.
 _DRIVER_VERIFY_MAX_ROWS = 16_384
 # Whole-input driver fast path for the filter-then-verify family
 # (skyband, top_dominating, reverse/k-dominant, prob_skyline): when the
@@ -417,20 +435,7 @@ def _skyline_2d_relational(
         ).first()
         grp_rows = stats["__n"]
         bounds = sorted(set(stats["__q"] or []))
-        # bucket id = number of boundaries strictly below d0.  A single
-        # size(filter(<literal array>)) expression, NOT a chained
-        # when().otherwise() sum: a 31-deep nested conditional makes every
-        # optimizer/codegen walk over this subplan quadratic-ish and costs
-        # ~4x the whole query's runtime at 32 buckets (measured).
-        if bounds:
-            # one parsed expression (the lit-by-lit array + filter lambda
-            # cost ~2 py4j round trips per boundary — similarity.py's
-            # module-top note); CAST-from-repr round-trips each double
-            arr = ",".join(f"CAST('{float(b)!r}' AS DOUBLE)" for b in bounds)
-            pid = F.expr(f"size(filter(array({arr}), b -> b < `{d0}`))")
-        else:
-            pid = F.lit(0)
-        ranged = grp.withColumn("__pid", pid)
+        ranged = grp.withColumn("__pid", range_bucket(d0, bounds))
         w_local = Window.partitionBy("__pid").orderBy(d0)
         pm_local = F.min("__m1").over(w_local.rowsBetween(Window.unboundedPreceding, -1))
         # pass 2: cross-range offsets, computed DRIVER-side — one tiny agg
@@ -484,15 +489,18 @@ def _skyline_2d_relational(
 def _broadcast_verify(
     cur: DataFrame, prep_cols: list[str], ref: DataFrame | None = None
 ) -> DataFrame:
-    """Parallel global merge: every task checks its rows against the full
-    survivor dim-matrix (self/duplicate pairs fail the strict test).
+    """One broadcast pass of the skyline filter: every task checks its
+    rows against the full reference dim-matrix and drops the dominated
+    ones (self/duplicate pairs fail the strict test).
 
-    ``ref`` (default: ``cur`` itself) supplies the reference matrix; passing
-    a known skyline lets callers re-verify an arbitrary row set against it
-    — e.g. bench.py's 1M sizecheck runs the WHOLE input through this with
-    the distributed result as ``ref``: the surviving row count equals the
-    result count iff the result is exactly the skyline (a false survivor
-    would be dominated and drop; a missed survivor would pass and add)."""
+    ``ref`` (default: ``cur`` itself) supplies the reference matrix; the
+    chunked merge passes one uniform chunk of the candidates per pass,
+    and passing a known skyline lets callers re-verify an arbitrary row
+    set against it — e.g. bench.py's 1M sizecheck runs the WHOLE input
+    through this with the distributed result as ``ref``: the surviving
+    row count equals the result count iff the result is exactly the
+    skyline (a false survivor would be dominated and drop; a missed
+    survivor would pass and add)."""
     spark = cur.sparkSession
     self_ref = ref is None
     dims_pdf = (cur if self_ref else ref).select(*prep_cols).toPandas()
@@ -550,6 +558,193 @@ def _broadcast_verify(
     return cur.mapInPandas(verify, schema=cur.schema)
 
 
+def _dim_matrix(tbl, prep_cols: list[str]) -> np.ndarray:
+    """Contiguous float64 (rows x dims) matrix of a collected Arrow
+    table's prep columns."""
+    return np.ascontiguousarray(
+        tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
+    )
+
+
+def _verify(frame: DataFrame, n: int, kernel: "_Verify"):
+    """THE global pass of the skyline family: finish the ``n`` counted,
+    cached phase-1 candidates in ``frame`` with ``kernel``, on one of
+    three physical paths chosen by size — the one place that choice is
+    made:
+
+    * ``n <= _DRIVER_VERIFY_MAX_ROWS`` — driver: collect once, run the
+      kernel on the driver, re-enter as a local relation
+      (:func:`_finish_on_driver`);
+    * ``n <= _VERIFY_MAX_ROWS`` — broadcast: ship the candidate
+      dim-matrix to every task and verify in parallel;
+    * otherwise — chunked: verify against ``<= _VERIFY_MAX_ROWS``-row
+      uniform chunks of the candidates, one broadcast pass per chunk.
+
+    The broadcast bound is tested first, so no path ever holds more than
+    ``_VERIFY_MAX_ROWS`` candidates, whatever the two gates are set to.
+    Every path runs the same kernel over the same candidate set, so the
+    rows are identical (forced-gate parity test).  Returns ``(result,
+    kept Arrow table)``; the table is None off the driver path, and
+    callers that need the rows driver-side reuse it instead of paying a
+    collect job."""
+    if n > _VERIFY_MAX_ROWS:
+        return kernel.chunked(frame, n), None
+    if n <= _DRIVER_VERIFY_MAX_ROWS:
+        return _finish_on_driver(frame, kernel.on_driver, kernel.col)
+    return kernel.broadcast(frame), None
+
+
+def _finish_on_driver(frame: DataFrame, kernel, col: str | None = None):
+    """Collect ``frame`` once as Arrow, run ``kernel(tbl) -> (keep,
+    values)`` on the driver, keep the selected rows (appending ``values``
+    as ``col`` when given) and re-enter them as a local relation.  At the
+    driver gate the whole candidate-vs-candidate block is a fraction of
+    a second on one core, while the distributed form pays a dims-collect
+    job plus a python-worker pass.  The Arrow round trip preserves Spark
+    types exactly (see :func:`_keyed_candidates`).  Returns ``(result,
+    kept Arrow table)``."""
+    import pyarrow as pa
+
+    tbl = frame.toArrow()
+    keep, values = kernel(tbl)
+    out = tbl if keep.all() else tbl.filter(pa.array(keep))
+    if col is not None:
+        out = out.append_column(col, pa.array(values[keep]))
+    return frame.sparkSession.createDataFrame(out), out
+
+
+class _Verify:
+    """A global-pass kernel for :func:`_verify`.  Subclasses give the
+    driver form (``on_driver(tbl) -> (keep, values)``; ``col`` names the
+    appended ``values`` column, None when nothing is appended) and one
+    broadcast pass against a reference matrix (``against(frame, ref,
+    first)``; ``ref`` None = the candidates themselves, ``first`` marks
+    the first pass of a chunk chain)."""
+
+    col: str | None = None
+
+    def __init__(self, prep_cols: list[str]):
+        self.prep_cols = prep_cols
+
+    def broadcast(self, frame: DataFrame) -> DataFrame:
+        return self.against(frame, None, True)
+
+    def chunked(self, frame: DataFrame, n: int) -> DataFrame:
+        """Verify against ``<= _VERIFY_MAX_ROWS``-row chunks of the
+        candidates, one broadcast pass per chunk, chained lazily.  Exact
+        because both kernels compose over ANY partition of the reference
+        set (property-tested): a row survives the skyline filter iff no
+        chunk dominates it, and dominator counts add up across chunks
+        (rows drop the moment the running count reaches ``k`` — counts
+        only grow).  A row meeting its own chunk is harmless (the strict
+        test never counts self or duplicate pairs).  Total work
+        O(n x |result|) across all cores with O(_VERIFY_MAX_ROWS x d)
+        broadcast per pass; it replaced a ``repartition(1)`` single-task
+        merge (10M 4-D anti-correlated points, ~1M survivors: >10 min on
+        one task, under a minute here).
+
+        Chunks are a uniform row key (:func:`_uniform_chunk_col`), NOT a
+        dim hash, so an all-duplicates corpus cannot collapse into one
+        oversized chunk.  The row key is unstable under recomputation, so
+        the assignment is pinned with an eager ``localCheckpoint``
+        (fail-stop on block loss, where an evicted ``persist`` would
+        silently recompute a different, overlapping assignment — r11
+        ADVICE).  Its lifetime is this loop: every pass pulls its chunk
+        eagerly, the returned chain references only ``frame`` and the
+        broadcasts, so the checkpoint is released on exit.  (An
+        ascending-coordinate-sum chunk ORDER for the counting chain was
+        A/B-probed at 10M 3-D k=4 and reverted: 285 s cold / 173 s warm
+        vs uniform's 294 / 177 — noise; SCALE.md.)"""
+        n_chunks = -(-n // _VERIFY_MAX_ROWS)
+        assign = (
+            frame.select(*self.prep_cols)
+            .withColumn("__vchunk", _uniform_chunk_col(n_chunks))
+            .localCheckpoint(eager=True)
+        )
+        try:
+            for i in range(n_chunks):
+                ref = assign.where(F.col("__vchunk") == i).drop("__vchunk")
+                frame = self.against(frame, ref, i == 0)
+        finally:
+            release_local_checkpoint(assign)
+        return frame
+
+
+class _SkylineFilter(_Verify):
+    """The skyline merge kernel: keep the candidates no candidate strictly
+    dominates.  On the driver ``SKY(candidates)`` via :func:`skyline_mask`
+    equals the verify-vs-self result by the skyline-merge monoid;
+    distributed passes are :func:`_broadcast_verify` with its f32 and
+    exact-sum fast paths."""
+
+    def on_driver(self, tbl):
+        return skyline_mask(_dim_matrix(tbl, self.prep_cols)), None
+
+    def against(self, frame, ref, first):
+        return _broadcast_verify(frame, self.prep_cols, ref)
+
+
+class _DominatorCount(_Verify):
+    """The k-skyband kernel: exact dominator counts against the candidate
+    union, keeping rows with fewer than ``k`` and appending the count as
+    ``col``.  Exact for true members (B1: all their dominators are in the
+    union) and exclusion-certifying for false survivors (B3), whether the
+    O(m^2) block runs once on the driver or in every task.  Counts do not
+    tree-merge, so unions past ``_TREE_FANOUT x _VERIFY_MAX_ROWS`` (~12.8M
+    rows, >3 GB of stacked float64 chunk broadcasts per worker at d=4)
+    raise — at that band volume the query itself is mis-specified."""
+
+    def __init__(self, prep_cols: list[str], k: int, col: str):
+        super().__init__(prep_cols)
+        self.k, self.col = k, col
+
+    def on_driver(self, tbl):
+        arr = _dim_matrix(tbl, self.prep_cols)
+        counts = _count_dominators_vs(arr, arr)
+        return counts < self.k, counts
+
+    def against(self, frame, ref, first):
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        cols, k, col = self.prep_cols, self.k, self.col
+        ref_pdf = (frame if ref is None else ref).select(*cols).toPandas()
+        bc = frame.sparkSession.sparkContext.broadcast(
+            np.ascontiguousarray(ref_pdf.to_numpy(dtype=np.float64))
+        )
+        # fresh StructType: .add() on DataFrame.schema would mutate the
+        # frame's CACHED StructType in place
+        schema = (
+            StructType(list(frame.schema.fields) + [StructField(col, LongType())])
+            if first
+            else frame.schema
+        )
+
+        def count_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            sky = bc.value
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                counts = _count_dominators_vs(pdf[cols].to_numpy(dtype=np.float64), sky)
+                if not first:
+                    counts += pdf[col].to_numpy()
+                keep = counts < k
+                if keep.any():
+                    out = pdf.loc[keep].copy()
+                    out[col] = counts[keep]
+                    yield out
+
+        return frame.mapInPandas(count_pass, schema=schema)
+
+    def chunked(self, frame, n):
+        if n > _TREE_FANOUT * _VERIFY_MAX_ROWS:
+            raise ValueError(
+                f"skyband: candidate union has {n} rows "
+                f"(> {_TREE_FANOUT * _VERIFY_MAX_ROWS}); raise k selectivity "
+                "or partition count"
+            )
+        return super().chunked(frame, n)
+
+
 def skyline(
     df: DataFrame,
     dims: Sequence,
@@ -597,44 +792,22 @@ def skyline(
 
 
 def _merge_survivors(local_df: DataFrame, prep_cols: list[str]) -> DataFrame:
-    """Global merge of local-skyline survivors: broadcast-verify when the
-    survivor set is bounded, tree-merge round (then chunked distributed
-    verify) otherwise."""
+    """Global merge of local-skyline survivors (see :func:`_skyline_merge`)."""
+    return _skyline_merge(local_df, prep_cols)[0]
+
+
+def _skyline_merge(local_df: DataFrame, prep_cols: list[str]):
+    """Persist and count the local-skyline survivors, run one tree-merge
+    round when they exceed the broadcast bound, then finish with the
+    skyline filter through :func:`_verify`.  Returns ``(result, kept
+    Arrow table or None)``."""
     local = _local_skyline_iter(prep_cols)
     cur = _persist(local_df)
     n = cur.count()
     if n > _VERIFY_MAX_ROWS:
         cur = _persist(cur.repartition(_TREE_FANOUT).mapInPandas(local, schema=cur.schema))
         n = cur.count()
-        if n > _VERIFY_MAX_ROWS:
-            return _chunked_broadcast_verify(cur, prep_cols, n)
-    if n <= _DRIVER_VERIFY_MAX_ROWS:
-        # driver-side merge: the survivor matrix this small would be
-        # collected for the broadcast anyway — run the identical kernel
-        # once on the driver and return a local relation, saving the
-        # dims-collect job and the python-worker verify pass
-        return _driver_verify_local(cur, prep_cols)
-    return _broadcast_verify(cur, prep_cols)
-
-
-def _driver_verify_local(cur: DataFrame, prep_cols: list[str]) -> DataFrame:
-    """Collect the (bounded, cached) survivor frame once and finish the
-    global merge with the same local kernel the distributed verify ships:
-    ``SKY(survivors)`` via :func:`skyline_mask` equals the verify-vs-self
-    result by the skyline-merge monoid (self/duplicate pairs fail the
-    strict test in both).  The Arrow round-trip preserves Spark types
-    exactly (see :func:`_keyed_candidates`)."""
-    import pyarrow as pa
-
-    tbl = cur.toArrow()
-    if tbl.num_rows == 0:
-        return cur
-    arr = np.ascontiguousarray(
-        tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
-    )
-    mask = skyline_mask(arr)
-    out_tbl = tbl if mask.all() else tbl.filter(pa.array(mask))
-    return cur.sparkSession.createDataFrame(out_tbl)
+    return _verify(cur, n, _SkylineFilter(prep_cols))
 
 
 def _uniform_chunk_col(n_chunks: int) -> Column:
@@ -659,62 +832,9 @@ def _uniform_chunk_col(n_chunks: int) -> Column:
     silently recomputing a different assignment that could overlap or
     miss rows across chunks (r11 ADVICE).  On a multi-node deployment
     where executor loss must be survivable, substitute a reliable
-    ``checkpoint()`` (HDFS-backed) at the same two call sites — the
+    ``checkpoint()`` (HDFS-backed) in :meth:`_Verify.chunked` — the
     lifetime contract is identical."""
     return F.pmod(F.monotonically_increasing_id(), F.lit(n_chunks))
-
-
-def _chunked_broadcast_verify(
-    cur: DataFrame, prep_cols: list[str], n: int
-) -> DataFrame:
-    """Distributed global merge for survivor volumes past the broadcast
-    bound: verify the candidate set against ``<= _VERIFY_MAX_ROWS``-row
-    hash-chunks of ITSELF, one broadcast-verify pass per chunk, each pass
-    dropping the rows that chunk dominates.
-
-    A row is a global survivor iff no candidate in ANY chunk strictly
-    dominates it, so progressive filtering (logical AND across passes) is
-    exact; chunk overlap or a row meeting its own chunk is harmless (the
-    strict test never drops a row against itself or a duplicate — the
-    duplicate-retention policy).  Every pass is the same parallel
-    mapInPandas sum-sort-pruned kernel as the bounded path — total work
-    O(n x |skyline|) spread across all cores with O(_VERIFY_MAX_ROWS x d)
-    broadcast and driver memory per pass.  This replaced a
-    ``repartition(1)`` single-task merge that did the identical
-    comparison volume on ONE core: at 10M 4-D anti-correlated points
-    (~1M survivors, measured) the single task ran >10 min while this
-    loop finishes in under a minute.
-
-    Chunking uses a uniform row key (:func:`_uniform_chunk_col`), NOT a
-    dim hash: the progressive filter is exact under ANY partition of the
-    reference set (property-tested: chunk composability), so nothing
-    requires duplicate dim-rows to co-locate — and a dim hash would let
-    an adversarial all-duplicates corpus collapse into one oversized
-    chunk.  The row key keeps every chunk near ``n / n_chunks`` by
-    construction.
-
-    The assignment frame's lifetime is the LOOP, not the result: every
-    reference pull (``toPandas`` inside :func:`_broadcast_verify`) runs
-    eagerly in the loop body, and the returned filter chain references
-    only ``cur`` — so the unstable row id is pinned with an eager
-    ``localCheckpoint`` (a plain ``persist`` can be evicted and silently
-    recomputed with a DIFFERENT assignment, over- or under-covering the
-    reference set, r11 ADVICE; a checkpoint is fail-stop) and released
-    as soon as the loop ends."""
-    n_chunks = -(-n // _VERIFY_MAX_ROWS)
-    assign = (
-        cur.select(*prep_cols)
-        .withColumn("__vchunk", _uniform_chunk_col(n_chunks))
-        .localCheckpoint(eager=True)
-    )
-    try:
-        out = cur
-        for i in range(n_chunks):
-            ref = assign.where(F.col("__vchunk") == i).drop("__vchunk")
-            out = _persist(_broadcast_verify(out, prep_cols, ref=ref))
-    finally:
-        release_local_checkpoint(assign)
-    return out
 
 
 def skyline_verify_count(df: DataFrame, dims: Sequence, result: DataFrame) -> int:
@@ -771,8 +891,7 @@ def _skyband_local_fn(prep_cols: list[str], k: int, compact_rows: int = 250_000)
     rows (unlike a skyline), so re-running the forward pass every ~10k-row
     Arrow batch repays O(|band|) per batch; compacting every ~250k
     buffered rows runs the pass ~25x less often for the same bounded
-    memory.  Shared by :func:`skyband` and :func:`top_dominating` (the
-    latter consumes the candidates directly, round 17)."""
+    memory.  Phase 1 of :func:`_skyband_members`."""
     from .skyline_kernel import skyband_mask
 
     def local_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -828,18 +947,16 @@ def skyband(
       for true members; for false survivors the same count certifies
       exclusion (B3: at least k of their dominators are in the union).
 
-    The candidate set is bounded by the ``_VERIFY_MAX_ROWS`` broadcast
-    guard; unlike the skyline there is no tree-merge fallback (dominator
-    COUNTS don't tree-merge), but counts ARE additive over a partition
-    of the candidate union, so volumes past the bound take a chunked
-    counting pipeline (one pass per <=bound-size hash-chunk of the
-    union, running counts accumulated across passes, rows early-dropped
-    the moment their running count reaches ``k`` — counts only grow).
-    Only a union past ``32 x _VERIFY_MAX_ROWS`` (where the stacked chunk
-    broadcasts would stop being a rounding error) still raises."""
+    The verify takes the family's one driver / broadcast / chunked
+    dispatch (:func:`_verify`).  Unlike the skyline there is no
+    tree-merge round (dominator COUNTS don't tree-merge), but counts ARE
+    additive over a partition of the candidate union, so volumes past
+    the broadcast bound take the chunked counting chain; only a union
+    past ``32 x _VERIFY_MAX_ROWS`` (where the stacked chunk broadcasts
+    would stop being a rounding error) raises."""
     from pyspark.sql.types import LongType, StructField, StructType
 
-    from .skyline_kernel import _count_dominators_vs, skyband_mask
+    from .skyline_kernel import skyband_mask
 
     if k < 1:
         raise ValueError(f"skyband: k must be >= 1, got {k}")
@@ -872,168 +989,22 @@ def skyband(
     # and at s22's shape the single-core whole-input pass measured
     # 0.57-0.75 s vs 0.44-0.52 s for the distributed-thin +
     # driver-verify composition below.)
+    band, _ = _skyband_members(prepped, prep_cols, k, count_col)
+    return band.select(*out_cols, count_col)
+
+
+def _skyband_members(prepped: DataFrame, prep_cols: list[str], k: int, count_col: str):
+    """The k-skyband of ``prepped`` with exact dominator counts as
+    ``count_col``: local thinning riding the scan (a certified superset,
+    B2), then the dominator-count kernel through :func:`_verify`.  Shared
+    by :func:`skyband` and :func:`top_dominating`; returns ``(band, kept
+    Arrow table or None)`` like :func:`_verify`."""
     phase1 = _persist(
         _fanout(prepped).mapInPandas(
             _skyband_local_fn(prep_cols, k), schema=prepped.schema
         )
     )
-    n = phase1.count()
-    if n > _VERIFY_MAX_ROWS:
-        return _chunked_skyband_verify(
-            phase1, prep_cols, k, count_col, out_cols, n
-        )
-    spark = phase1.sparkSession
-    if n <= _DRIVER_VERIFY_MAX_ROWS:
-        # driver-side verify (see _DRIVER_VERIFY_MAX_ROWS): dominator
-        # counts against the candidate union are exact for true members
-        # (B1) and exclusion-certifying for false survivors (B3) whether
-        # the O(m^2) counting block runs broadcast in every task or once
-        # on the driver over the matrix the broadcast would ship anyway.
-        # One collect replaces the dims-collect job + the python-worker
-        # verify pass, and the result re-enters as a local relation.
-        import pyarrow as pa
-
-        tbl = phase1.toArrow()
-        if tbl.num_rows == 0:
-            return phase1.select(*out_cols).withColumn(
-                count_col, F.lit(0).cast("long")
-            )
-        arr = np.ascontiguousarray(
-            tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
-        )
-        counts = _count_dominators_vs(arr, arr)
-        keep = counts < k
-        out_tbl = (tbl if keep.all() else tbl.filter(pa.array(keep))).append_column(
-            count_col, pa.array(counts[keep], pa.int64())
-        )
-        return spark.createDataFrame(out_tbl).select(*out_cols, count_col)
-    cand_pdf = phase1.select(*prep_cols).toPandas()
-    cand_arr = np.ascontiguousarray(cand_pdf.to_numpy(dtype=np.float64))
-    bc = spark.sparkContext.broadcast(cand_arr)
-
-    # fresh StructType (imported at the top of the function): .add() on
-    # DataFrame.schema would mutate the frame's CACHED StructType in place,
-    # silently corrupting the source frame's python-side schema
-    schema = StructType(list(phase1.schema.fields) + [StructField(count_col, LongType())])
-
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ref = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pts = pdf[prep_cols].to_numpy(dtype=np.float64)
-            counts = _count_dominators_vs(pts, ref)
-            keep = counts < k
-            out = pdf.loc[keep].copy()
-            if not out.empty:
-                out[count_col] = counts[keep]
-                yield out
-
-    return phase1.mapInPandas(verify, schema=schema).select(*out_cols, count_col)
-
-
-def _chunked_skyband_verify(
-    phase1: DataFrame,
-    prep_cols: list[str],
-    k: int,
-    count_col: str,
-    out_cols: list[str],
-    n: int,
-) -> DataFrame:
-    """Skyband verification for candidate unions past the broadcast bound:
-    dominator counts are ADDITIVE over a partition of the union, so the
-    counting scan becomes one chained pass per ``<= _VERIFY_MAX_ROWS``-row
-    uniform-row-key chunk of the candidates, each pass adding that
-    chunk's dominator counts to the running column and dropping rows the
-    moment the running count reaches ``k`` (counts only grow, so the
-    early drop is exact — B3 certifies such rows are excluded either
-    way).
-
-    The passes chain LAZILY into one streaming mapInPandas pipeline: no
-    intermediate materialization, each worker holds the chunk arrays
-    (total = the whole candidate dim-matrix, n x d doubles) plus one
-    Arrow batch.  That stacked-broadcast total is the scale bound, so a
-    union past ``_TREE_FANOUT x _VERIFY_MAX_ROWS`` rows (~12.8M, >3 GB
-    of float64 matrices per worker at d=4) still raises — at that band
-    volume the query itself is mis-specified (raise k selectivity or
-    pre-filter)."""
-    if n > _TREE_FANOUT * _VERIFY_MAX_ROWS:
-        raise ValueError(
-            f"skyband: candidate union has {n} rows "
-            f"(> {_TREE_FANOUT * _VERIFY_MAX_ROWS}); raise k selectivity "
-            "or partition count"
-        )
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from .skyline_kernel import _count_dominators_vs
-
-    spark = phase1.sparkSession
-    n_chunks = -(-n // _VERIFY_MAX_ROWS)
-    # Uniform row-key chunks (see _uniform_chunk_col): counts are
-    # additive over ANY partition of the union (property-tested), and the
-    # key bounds every chunk by construction even on an all-duplicates
-    # corpus.  An ascending-coordinate-sum chunk ORDER (strongest
-    # dominators first, maximizing the count-to-k early drop) was A/B
-    # probed at 10M 3-D k=4 and REVERTED with numbers: the prototype's
-    # apparent 1.75x cold win was same-session plan-cache inheritance
-    # (its phase-1 union came from the prior run's persisted plan — its
-    # "cold" beat uniform's warm, the tell); a fresh-session production
-    # run measured 285 s cold / 173 s warm vs uniform's 294 / 177 —
-    # inside noise, not worth the extra quantile pass + tie-bucket
-    # sub-splitting (SCALE.md records both probes).
-    #
-    # The assignment's lifetime is the LOOP: every reference pull below
-    # is eager, and the returned counting chain references only phase1 —
-    # so the unstable row id is pinned with an eager localCheckpoint
-    # (persist could be evicted and silently recomputed with a DIFFERENT
-    # assignment — overlap double-counts dominators, a gap undercounts;
-    # a checkpoint is fail-stop on block loss, r11 ADVICE) and released
-    # as soon as the pulls are done.
-    chunks = (
-        phase1.select(*prep_cols)
-        .withColumn("__vchunk", _uniform_chunk_col(n_chunks))
-        .localCheckpoint(eager=True)
-    )
-    try:
-        refs = []
-        for i in range(n_chunks):
-            # keep only the compact float64 matrix (which the broadcasts
-            # need anyway) — retaining the pandas frames too would double
-            # the driver's peak at the n x d scale bound (r11 review)
-            refs.append(
-                np.ascontiguousarray(
-                    chunks.where(F.col("__vchunk") == i)
-                    .select(*prep_cols)
-                    .toPandas()
-                    .to_numpy(dtype=np.float64)
-                )
-            )
-    finally:
-        release_local_checkpoint(chunks)
-    schema = StructType(
-        list(phase1.schema.fields) + [StructField(count_col, LongType())]
-    )
-    cur = phase1
-    for i, arr in enumerate(refs):
-        bc = spark.sparkContext.broadcast(arr)
-
-        def count_pass(
-            batches: Iterator[pd.DataFrame], bc=bc, first=(i == 0)
-        ) -> Iterator[pd.DataFrame]:
-            ref = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                pts = pdf[prep_cols].to_numpy(dtype=np.float64)
-                add = _count_dominators_vs(pts, ref)
-                out = pdf.copy()
-                out[count_col] = add if first else out[count_col].to_numpy() + add
-                out = out.loc[out[count_col] < k]
-                if not out.empty:
-                    yield out
-
-        cur = cur.mapInPandas(count_pass, schema=schema)
-    return cur.select(*out_cols, count_col)
+    return _verify(phase1, phase1.count(), _DominatorCount(prep_cols, k, count_col))
 
 
 def _keyed_candidates(spark, cand_tbl) -> DataFrame:
@@ -1080,8 +1051,6 @@ def top_dominating(
 
     Output: the candidate's original columns + ``count_col`` +
     ``rank_col`` (1-based)."""
-    from .skyline_kernel import _SKYBAND_CHUNK
-
     if k < 1:
         raise ValueError(f"top_dominating: k must be >= 1, got {k}")
     out_cols = df.columns
@@ -1094,72 +1063,11 @@ def top_dominating(
     # single-core whole-input measured 1.4-1.6 s vs 1.1-1.4 s distributed
     # at s23's shape.)
     #
-    # Candidates = the k-skyband, consumed DIRECTLY from the shared
-    # phase-1 thinning + one driver verify (round 17): the former
-    # ``skyband()`` call materialized the band as a local relation that
-    # this operator immediately re-prepped and re-collected — one extra
-    # job plus a full Spark->driver->Spark->driver round trip per call
-    # for data already in hand.  Identical candidate set: same local
-    # kernel, same driver-side dominator-count verify (B1/B3).
-    from .skyline_kernel import _count_dominators_vs
-
-    phase1 = _persist(
-        _fanout(prepped).mapInPandas(
-            _skyband_local_fn(prep_cols, k), schema=prepped.schema
-        )
-    )
-    n_band = phase1.count()
-    if n_band <= _DRIVER_VERIFY_MAX_ROWS:
-        # driver verify — the same gate skyband uses for this kernel (the
-        # O(n_band^2) count is single-threaded here; round-17 review
-        # caught the first cut of this refactor running it for unions up
-        # to _VERIFY_MAX_ROWS, 24x past the gate)
-        union_tbl = phase1.toArrow()  # cached — the count materialized it
-        if union_tbl.num_rows:
-            union_arr = np.ascontiguousarray(
-                union_tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
-            )
-            counts = _count_dominators_vs(union_arr, union_arr)
-            keep = counts < k
-            if keep.all():
-                cand_tbl, cand_arr = union_tbl, union_arr
-            else:
-                import pyarrow as pa
-
-                cand_tbl = union_tbl.filter(pa.array(keep))
-                cand_arr = np.ascontiguousarray(union_arr[keep])
-        else:
-            cand_tbl = union_tbl
-    elif n_band <= _VERIFY_MAX_ROWS:
-        # distributed broadcast-verify (skyband's mid path): the counting
-        # block parallelizes across the cached union's partitions
-        cand_pdf = phase1.select(*prep_cols).toPandas()
-        union_arr = np.ascontiguousarray(cand_pdf.to_numpy(dtype=np.float64))
-        bc_u = spark.sparkContext.broadcast(union_arr)
-
-        def band_verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ref = bc_u.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                pts = pdf[prep_cols].to_numpy(dtype=np.float64)
-                out = pdf.loc[_count_dominators_vs(pts, ref) < k]
-                if not out.empty:
-                    yield out
-
-        cand_tbl = phase1.mapInPandas(band_verify, schema=phase1.schema).toArrow()
-        cand_arr = np.ascontiguousarray(
-            cand_tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
-        )
-    else:  # oversized union: the chunked counting pipeline, then collect
-        band = _chunked_skyband_verify(
-            phase1, prep_cols, k, "n_dominators", df.columns, n_band
-        )
-        band_prepped, _ = _prep(band.drop("n_dominators"), dims)
-        cand_tbl = band_prepped.toArrow()
-        cand_arr = np.ascontiguousarray(
-            cand_tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
-        )
+    # Candidates = the k-skyband from the same call skyband() makes; on
+    # the driver path the kept Arrow table is reused (no re-collect).
+    band, cand_tbl = _skyband_members(prepped, prep_cols, k, "__band_n")
+    if cand_tbl is None:
+        cand_tbl = band.toArrow()
     if cand_tbl.num_rows == 0:  # empty input -> empty result with the contract schema
         empty = prepped.select(*out_cols).limit(0)
         return empty.select(
@@ -1167,50 +1075,18 @@ def top_dominating(
             F.lit(0).cast("long").alias(count_col),
             F.lit(0).cast("int").alias(rank_col),
         )
+    cand_arr = _dim_matrix(cand_tbl, prep_cols)
     bc = spark.sparkContext.broadcast(cand_arr)
 
-    def partial_counts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .skyline_kernel import _ChunkScratch, _M_CHUNK
-
+    def dominated_counts(pts: np.ndarray) -> np.ndarray:
         cand = bc.value
-        m, d = cand.shape
-        acc = np.zeros(m, dtype=np.int64)
-        # per-TASK scratch planes, comparisons via out= (round-15
-        # allocator-churn discipline)
-        scratch = _ChunkScratch(min(m, _M_CHUNK), _SKYBAND_CHUNK)
-        le_p, eq_p, tmp_p = scratch.dom, scratch.neq, scratch.tmp
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pts = pdf[prep_cols].to_numpy(dtype=np.float64)
-            # chunk BOTH sides: cache-sized boolean temporaries even when
-            # the candidate band is tens of thousands of rows
-            for ps in range(0, pts.shape[0], _SKYBAND_CHUNK):
-                pc = pts[ps : ps + _SKYBAND_CHUNK]
-                for ms in range(0, m, _M_CHUNK):
-                    cc = cand[ms : ms + _M_CHUNK]
-                    a, b = cc.shape[0], pc.shape[0]
-                    le, eq, tmp = le_p[:a, :b], eq_p[:a, :b], tmp_p[:a, :b]
-                    le[:] = True
-                    eq[:] = True
-                    for j in range(d):
-                        cj = cc[:, j][:, None]
-                        pj = pc[:, j][None, :]
-                        np.less_equal(cj, pj, out=tmp)
-                        np.logical_and(le, tmp, out=le)
-                        np.equal(cj, pj, out=tmp)
-                        np.logical_and(eq, tmp, out=eq)
-                    np.logical_not(eq, out=eq)
-                    np.logical_and(le, eq, out=le)
-                    acc[ms : ms + _M_CHUNK] += le.sum(axis=1, dtype=np.int64)
-        yield pd.DataFrame({"__cand_idx": np.arange(m), "__partial": acc})
+        acc = np.zeros(cand.shape[0], dtype=np.int64)
+        for _ps, ms, plane, _tmp in dominance_planes(cand, pts, True):
+            acc[ms : ms + plane.shape[0]] += plane.sum(axis=1, dtype=np.int64)
+        return acc
 
-    partials = _fanout(prepped).mapInPandas(
-        partial_counts, schema="__cand_idx long, __partial long"
-    )
-    totals = (
-        partials.groupBy("__cand_idx")
-        .agg(F.sum("__partial").alias(count_col))
+    totals = _broadcast_partial_counts(
+        prepped, prep_cols, dominated_counts, cand_arr.shape[0], count_col
     )
 
     # the SAME collected Arrow table feeds both the broadcast matrix and
@@ -1264,10 +1140,7 @@ def _collect_verified_candidates(prepped, local_fn, prep_cols, op_name):
             f"{op_name}: candidate set has {n_cand} rows "
             f"(> {_VERIFY_MAX_ROWS}); raise pool_size or partition count"
         )
-    cand_arr = np.ascontiguousarray(
-        cand_tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
-    )
-    return phase1, cand_tbl, cand_arr
+    return phase1, cand_tbl, _dim_matrix(cand_tbl, prep_cols)
 
 
 def _broadcast_partial_counts(prepped, prep_cols, count_batch, m, total_col):
@@ -1458,9 +1331,7 @@ def reverse_skyline(
     if tbl is not None:
         import pyarrow as pa
 
-        pts = np.ascontiguousarray(
-            tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
-        )
+        pts = _dim_matrix(tbl, prep_cols)
         n_rows, d_dims = pts.shape
         if n_rows == 0:
             return df.sparkSession.createDataFrame(tbl).select(*out_cols)
@@ -1697,7 +1568,7 @@ def skyline_layers(
        candidate-relative layer <= K, and rows of global layer <= K are
        exactly the rows reported (with the correct layer).
     3. Rows with candidate layer <= n_layers re-enter Spark via the
-       Arrow table (type-exact, see :func:`_keyed_candidates`).
+       Arrow table (:func:`_finish_on_driver`, type-exact).
 
     Value-equal rows land in the same layer (ties never dominate), the
     same contract as the old value-equality peel.  Rows with NULL/NaN
@@ -1709,7 +1580,6 @@ def skyline_layers(
     if n_layers < 1:
         raise ValueError(f"skyline_layers: n_layers must be >= 1, got {n_layers}")
     out_cols = df.columns
-    spark = df.sparkSession
     prepped, prep_cols = _prep(df, dims)
 
     def local_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1726,27 +1596,15 @@ def skyline_layers(
             yield cur
 
     phase1 = _persist(_fanout(prepped).mapInPandas(local_fn, schema=prepped.schema))
-    n_cand = phase1.count()
-    if n_cand > _VERIFY_MAX_ROWS:
+    if phase1.count() > _VERIFY_MAX_ROWS:
         return _skyline_layers_peel(df, dims, n_layers, layer_col)
-    import pyarrow as pa
 
-    cand_tbl = phase1.toArrow()
-    if cand_tbl.num_rows == 0:
-        return (
-            phase1.limit(0)
-            .withColumn(layer_col, F.lit(0).cast("int"))
-            .select(*out_cols, layer_col)
-        )
-    cand_arr = np.ascontiguousarray(
-        cand_tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
-    )
-    glay = onion_layers(cand_arr, n_layers)
-    keep = glay > 0
-    kept = cand_tbl.filter(pa.array(keep)).append_column(
-        layer_col, pa.array(glay[keep].astype(np.int32), pa.int32())
-    )
-    return spark.createDataFrame(kept).select(*out_cols, layer_col)
+    def layers(tbl):
+        lay = onion_layers(_dim_matrix(tbl, prep_cols), n_layers)
+        return lay > 0, lay.astype(np.int32)
+
+    kept, _ = _finish_on_driver(phase1, layers, layer_col)
+    return kept.select(*out_cols, layer_col)
 
 
 def _skyline_layers_peel(
@@ -1875,29 +1733,17 @@ def skycube(
 
     # Full-space skyline with the collected rows kept: the keysets below
     # need the full skyline's dim values driver-side anyway, so when the
-    # phase-1 survivor set is bounded, finish the merge on the driver
-    # (same kernel, see _driver_verify_local) and reuse ONE collect for
-    # the result rows, n_full, AND the keyset source — the former
-    # skyline() + count() + toPandas() sequence paid three extra jobs
-    # for data already in hand.
-    full_tbl = None
+    # merge finishes on the driver, ONE collect serves the result rows,
+    # n_full AND the keyset source (no separate count or collect job).
     local = _local_skyline_iter(prep_cols)
-    phase1 = _persist(_fanout(prepped).mapInPandas(local, schema=prepped.schema))
-    n_surv = phase1.count()
-    if n_surv <= _DRIVER_VERIFY_MAX_ROWS:
-        import pyarrow as pa
-
-        tbl = phase1.toArrow()
-        arr = np.ascontiguousarray(
-            tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
-        )
-        mask = skyline_mask(arr)
-        full_tbl = tbl if mask.all() else tbl.filter(pa.array(mask))
-        full = spark.createDataFrame(full_tbl.select(out_cols))
-        n_full = full_tbl.num_rows
-    else:
-        full = _persist(_merge_survivors(phase1, prep_cols).select(*out_cols))
+    full, full_tbl = _skyline_merge(
+        _fanout(prepped).mapInPandas(local, schema=prepped.schema), prep_cols
+    )
+    if full_tbl is None:
+        full = _persist(full.select(*out_cols))
         n_full = full.count()
+    else:
+        n_full = full_tbl.num_rows
     out = full.select(F.lit(label(names)).alias(label_col), *df.columns)
     if len(nd) < 2:
         return out
@@ -1986,49 +1832,50 @@ def skycube(
     # an evicted survivor partition may recompute the scan, and the
     # driver can re-ship an unpersisted broadcast but not a destroyed one
     bc.unpersist(blocking=False)
-    total_surv = sum(counts.values())
-    if total_surv <= _DRIVER_VERIFY_MAX_ROWS:
-        # all labels' survivors together fit the driver gate: one collect
-        # of the cached survivor frame, per-label merges with the same
-        # kernel (rows are already padded on non-subspace dims, so the
-        # full-dim kernel is subspace dominance, as in the grouped path)
-        import pyarrow as pa
-        import pyarrow.compute as pc
+    merged, _ = _verify(
+        surv, sum(counts.values()), _LabelSkylines(prep_cols, label_col, counts)
+    )
+    return out.unionByName(merged.select(label_col, *out_cols))
 
-        surv_tbl = surv.toArrow()
-        parts = []
-        lbls = surv_tbl.column(label_col)
-        for lbl, _, _ in masks:
-            if not counts.get(lbl):
-                continue
-            sub = surv_tbl.filter(pc.equal(lbls, lbl))
-            m = skyline_mask(
-                sub.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
-            )
-            parts.append(sub if m.all() else sub.filter(pa.array(m)))
-        if parts:
-            merged_tbl = pa.concat_tables(parts)
+
+class _LabelSkylines(_Verify):
+    """The skycube's per-subspace merge kernel.  Tagged rows carry their
+    subspace label and are padded to a constant on the dims outside it,
+    so the full-dim skyline of one label's rows IS that subspace's
+    skyline.  Driver: one :func:`skyline_mask` per label over the one
+    collect.  Distributed: labels within the broadcast bound merge in one
+    grouped pass keyed on the label; a label past it (``counts`` holds
+    each label's survivor count) takes the full skyline merge on its
+    own — raise-don't-degrade, the grouped pass never single-tasks an
+    unbounded group."""
+
+    def __init__(self, prep_cols: list[str], label_col: str, counts: dict):
+        super().__init__(prep_cols)
+        self.label_col, self.counts = label_col, counts
+
+    def on_driver(self, tbl):
+        arr = _dim_matrix(tbl, self.prep_cols)
+        labels = tbl.column(self.label_col).to_pandas()
+        keep = np.zeros(tbl.num_rows, dtype=bool)
+        for rows in labels.groupby(labels).indices.values():
+            keep[rows] = skyline_mask(arr[rows])
+        return keep, None
+
+    def broadcast(self, frame):
+        lc = self.label_col
+        big = [lbl for lbl, n in self.counts.items() if n > _VERIFY_MAX_ROWS]
+        small = frame.where(~F.col(lc).isin(big)) if big else frame
+        out = small.groupBy(lc).applyInPandas(
+            _grouped_skyline(self.prep_cols), schema=frame.schema
+        )
+        for lbl in big:
             out = out.unionByName(
-                spark.createDataFrame(merged_tbl).select(label_col, *out_cols)
+                _merge_survivors(frame.where(F.col(lc) == lbl), self.prep_cols)
             )
         return out
-    small = [lbl for lbl, _, _ in masks if counts.get(lbl, 0) <= _VERIFY_MAX_ROWS]
-    if small:
-        merged = (
-            surv.where(F.col(label_col).isin(small))
-            .groupBy(label_col)
-            .applyInPandas(_grouped_skyline(prep_cols), schema=schema)
-        )
-        out = out.unionByName(merged.select(label_col, *out_cols))
-    for lbl, _, _ in masks:
-        if lbl in small:
-            continue
-        # survivor volume beyond the broadcast bound: distributed merge
-        big = _merge_survivors(
-            surv.where(F.col(label_col) == lbl), prep_cols
-        )
-        out = out.unionByName(big.select(label_col, *out_cols))
-    return out
+
+    def chunked(self, frame, n):
+        return self.broadcast(frame)
 
 
 def _scatter_obj_counts(
@@ -2220,11 +2067,9 @@ def prob_skyline(
     # count block is bounded before each phase; past the bound the
     # distributed path below runs unchanged.
     if driver_small:
-        from .skyline_kernel import _ChunkScratch, _M_CHUNK, _SKYBAND_CHUNK, skyband_mask
+        from .skyline_kernel import skyband_mask
 
-        pts = np.ascontiguousarray(
-            tbl.select(prep_cols).to_pandas().to_numpy(dtype=np.float64)
-        )
+        pts = _dim_matrix(tbl, prep_cols)
         oidx = (
             tbl.select(obj_cols)
             .to_pandas()
@@ -2240,28 +2085,8 @@ def prob_skyline(
             cand = np.ascontiguousarray(pts[cand_sel])
             mm = cand.shape[0]
             acc = np.zeros((n_obj, mm), dtype=np.int64)
-            d_dims = cand.shape[1]
-            scratch = _ChunkScratch(min(mm, _M_CHUNK), _SKYBAND_CHUNK)
-            le_p, eq_p, tmp_p = scratch.dom, scratch.neq, scratch.tmp
-            for ps in range(0, pts.shape[0], _SKYBAND_CHUNK):
-                pc = pts[ps : ps + _SKYBAND_CHUNK]
-                oc = oidx[ps : ps + _SKYBAND_CHUNK]
-                for ms in range(0, mm, _M_CHUNK):
-                    cc = cand[ms : ms + _M_CHUNK]
-                    a, b = cc.shape[0], pc.shape[0]
-                    le, eq, tmp = le_p[:a, :b], eq_p[:a, :b], tmp_p[:a, :b]
-                    le[:] = True
-                    eq[:] = True
-                    for j in range(d_dims):
-                        cj = cc[:, j][:, None]
-                        pj = pc[:, j][None, :]
-                        np.less_equal(pj, cj, out=tmp)
-                        np.logical_and(le, tmp, out=le)
-                        np.equal(pj, cj, out=tmp)
-                        np.logical_and(eq, tmp, out=eq)
-                    np.logical_not(eq, out=eq)
-                    np.logical_and(le, eq, out=le)
-                    _scatter_obj_counts(acc, oc, le, tmp, ms)
+            for ps, ms, plane, tmp in dominance_planes(cand, pts, False):
+                _scatter_obj_counts(acc, oidx[ps : ps + plane.shape[1]], plane, tmp, ms)
             own = oidx[cand_sel]
             acc[own, np.arange(mm)] = 0
             nzo, nzc = np.nonzero(acc)
@@ -2332,11 +2157,9 @@ def prob_skyline(
             cand = bc_cand.value
             omap = bc_map.value
             acc = np.zeros((len(omap), cand.shape[0]), dtype=np.int64)
-            d = cand.shape[1]
             # per-TASK scratch planes (round-15 allocator-churn
             # discipline)
             scratch = _ChunkScratch(min(cand.shape[0], _M_CHUNK), _SKYBAND_CHUNK)
-            le_p, eq_p, tmp_p = scratch.dom, scratch.neq, scratch.tmp
             for pdf in batches:
                 if pdf.empty:
                     continue
@@ -2346,26 +2169,8 @@ def prob_skyline(
                     .merge(omap, on=obj_cols, how="left")["__obj_idx"]
                     .to_numpy(dtype=np.int64)
                 )
-                for ps in range(0, pts.shape[0], _SKYBAND_CHUNK):
-                    pc = pts[ps : ps + _SKYBAND_CHUNK]
-                    oc = oidx[ps : ps + _SKYBAND_CHUNK]
-                    for ms in range(0, cand.shape[0], _M_CHUNK):
-                        cc = cand[ms : ms + _M_CHUNK]
-                        a, b = cc.shape[0], pc.shape[0]
-                        le, eq, tmp = le_p[:a, :b], eq_p[:a, :b], tmp_p[:a, :b]
-                        le[:] = True
-                        eq[:] = True
-                        for j in range(d):
-                            cj = cc[:, j][:, None]
-                            pj = pc[:, j][None, :]
-                            # scanned point <= candidate
-                            np.less_equal(pj, cj, out=tmp)
-                            np.logical_and(le, tmp, out=le)
-                            np.equal(pj, cj, out=tmp)
-                            np.logical_and(eq, tmp, out=eq)
-                        np.logical_not(eq, out=eq)
-                        np.logical_and(le, eq, out=le)
-                        _scatter_obj_counts(acc, oc, le, tmp, ms)
+                for ps, ms, plane, tmp in dominance_planes(cand, pts, False, scratch):
+                    _scatter_obj_counts(acc, oidx[ps : ps + plane.shape[1]], plane, tmp, ms)
             # the own-object exclusion ("product over OTHER objects")
             # zeroes at the source — the former post-sum __own_idx
             # anti-filter needed the candidates re-broadcast as a keyed

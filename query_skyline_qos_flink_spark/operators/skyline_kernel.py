@@ -351,43 +351,56 @@ def skyline_mask_brute(points: np.ndarray) -> np.ndarray:
 _SKYBAND_CHUNK = 8192
 
 
-def _count_dominators_vs(cand: np.ndarray, sky: np.ndarray,
-                         scratch: "_ChunkScratch | None" = None) -> np.ndarray:
-    """Exact count of ``sky`` rows dominating each ``cand`` row.
+def dominance_planes(cand: np.ndarray, pts: np.ndarray, cand_dominates: bool,
+                     scratch: "_ChunkScratch | None" = None):
+    """The (candidate x point) dominance planes, one cache-sized block at a
+    time: yields ``(ps, ms, plane, tmp)`` where ``plane[i, j]`` is True iff
+    ``cand[ms + i]`` strictly dominates ``pts[ps + j]`` (``cand_dominates``)
+    or ``pts[ps + j]`` strictly dominates ``cand[ms + i]`` (otherwise), and
+    ``tmp`` is a free scratch plane of the same shape.  Both views are
+    reused by the next block, so consume them before resuming.
 
-    Chunked on BOTH sides so the boolean comparison matrices stay
-    cache-sized (_M_CHUNK x _SKYBAND_CHUNK = 16 MB after the r15 retune) regardless of how
-    large either side grows — a single-side chunking at band sizes in the
-    tens of thousands allocates multi-hundred-MB temporaries per
-    dimension and turns the pass memory-bound."""
+    Chunked on BOTH sides (_M_CHUNK candidates x _SKYBAND_CHUNK points, 16
+    MB planes after the r15 retune) so the boolean planes stay cache-sized
+    however large either side grows — single-side chunking at band sizes
+    in the tens of thousands allocates multi-hundred-MB temporaries per
+    dimension and turns the pass memory-bound.  Per-dim comparisons go
+    ``out=`` into the scratch planes (round-15 allocator-churn
+    discipline); callers in a loop hoist one :class:`_ChunkScratch`."""
     m, d = cand.shape
-    counts = np.zeros(m, dtype=np.int64)
-    if m == 0 or sky.shape[0] == 0:
-        return counts
-    # per-CALL scratch planes, per-dim comparisons via out= (round-15
-    # allocator-churn discipline); callers in a loop (skyband_mask's
-    # forward pass) hoist and pass one _ChunkScratch instead
+    if m == 0 or pts.shape[0] == 0:
+        return
     if scratch is None:
-        scratch = _ChunkScratch(min(m, _M_CHUNK), min(sky.shape[0], _SKYBAND_CHUNK))
-    for ms in range(0, m, _M_CHUNK):
-        cc = cand[ms : ms + _M_CHUNK]
-        sub = counts[ms : ms + _M_CHUNK]
-        for ks in range(0, sky.shape[0], _SKYBAND_CHUNK):
-            sc = sky[ks : ks + _SKYBAND_CHUNK]
-            a, b = cc.shape[0], sc.shape[0]
+        scratch = _ChunkScratch(min(m, _M_CHUNK), min(pts.shape[0], _SKYBAND_CHUNK))
+    for ps in range(0, pts.shape[0], _SKYBAND_CHUNK):
+        pc = pts[ps : ps + _SKYBAND_CHUNK]
+        for ms in range(0, m, _M_CHUNK):
+            cc = cand[ms : ms + _M_CHUNK]
+            a, b = cc.shape[0], pc.shape[0]
             le, eq, tmp = scratch.dom[:a, :b], scratch.neq[:a, :b], scratch.tmp[:a, :b]
             le[:] = True
             eq[:] = True
             for j in range(d):
-                sj = sc[:, j][None, :]
                 cj = cc[:, j][:, None]
-                np.less_equal(sj, cj, out=tmp)
+                pj = pc[:, j][None, :]
+                if cand_dominates:
+                    np.less_equal(cj, pj, out=tmp)
+                else:
+                    np.less_equal(pj, cj, out=tmp)
                 np.logical_and(le, tmp, out=le)
-                np.equal(sj, cj, out=tmp)
+                np.equal(cj, pj, out=tmp)
                 np.logical_and(eq, tmp, out=eq)
             np.logical_not(eq, out=eq)
             np.logical_and(le, eq, out=le)
-            sub += le.sum(axis=1, dtype=np.int64)
+            yield ps, ms, le, tmp
+
+
+def _count_dominators_vs(cand: np.ndarray, sky: np.ndarray,
+                         scratch: "_ChunkScratch | None" = None) -> np.ndarray:
+    """Exact count of ``sky`` rows dominating each ``cand`` row."""
+    counts = np.zeros(cand.shape[0], dtype=np.int64)
+    for _ps, ms, plane, _tmp in dominance_planes(cand, sky, False, scratch):
+        counts[ms : ms + plane.shape[0]] += plane.sum(axis=1, dtype=np.int64)
     return counts
 
 
@@ -503,7 +516,7 @@ def skyband_mask_brute(points: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarr
 #     forall d: |r_d - p_d| <= |q_d - p_d|,  exists d: |r_d - p_d| < |q_d - p_d|.
 # The per-candidate half-widths w_i = |q - p_i| are fixed, so refuting is a
 # box-membership count — the same chunked column-at-a-time shape as
-# _count_dominators_vs, with an absolute-difference comparison.
+# dominance_planes, with an absolute-difference comparison.
 
 
 def count_refuters_vs(cand: np.ndarray, widths: np.ndarray, pts: np.ndarray) -> np.ndarray:

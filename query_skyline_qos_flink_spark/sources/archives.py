@@ -532,12 +532,6 @@ def _pax_record_pairs(data: bytes, at_byte: int) -> list[tuple[str, str]]:
     return recs
 
 
-def _pax_records(data: bytes, at_byte: int) -> dict[str, str]:
-    """Dict view of :func:`_pax_record_pairs` — later records override
-    earlier ones (the spec's stated precedence)."""
-    return dict(_pax_record_pairs(data, at_byte))
-
-
 def _gnu_longdata(data: bytes, size: int, flag: bytes, off: int) -> str:
     """GNU 'L'/'K' payload: the long name, NUL-terminated; anything after
     the first NUL must be zero padding."""

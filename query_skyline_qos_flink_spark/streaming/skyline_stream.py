@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.partitioners import partition_id
-from ..operators.skyline_kernel import skyline_mask, skyline_update
+from ..operators.skyline_kernel import skyline_mask
 
 OUTPUT_SCHEMA = (
     "query_id string, pid int, id bigint, values array<double>, "
@@ -187,35 +187,6 @@ def _make_stateful_update(d: int | None = None):
     return fn
 
 
-def make_skyline_processor(d: int | None = None):
-    """transformWithStateInPandas backend factory (Spark >= 4.0): identical
-    operator body over a value-state handle — the production choice per
-    SCALE.md (RocksDB-backed state handles instead of whole-tuple
-    re-serialization).
-
-    Requires ``google.protobuf`` in the Python workers (the TWS state-server
-    protocol); environments without it should use the ``classic`` backend.
-    A factory (not a class) so the pyspark import stays lazy and the
-    returned object is a genuine StatefulProcessor instance."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class _SkylineProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._state = handle.getValueState("skyline_state", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            cur = self._state.get() if self._state.exists() else None
-            new_state, out_frames = _apply_batch(int(key[0]), cur, rows, d=d)
-            self._state.update(new_state)
-            for f in out_frames:
-                yield f
-
-        def close(self) -> None:
-            pass
-
-    return _SkylineProcessor()
-
-
 def build_skyline_stream(
     data: DataFrame,
     triggers: DataFrame,
@@ -223,12 +194,8 @@ def build_skyline_stream(
     num_partitions: int = 8,
     strategy: str = "dim",
     domain: float = 10000.0,
-    state_api: str = "classic",
 ) -> DataFrame:
-    """Wire the union-tagged stateful topology.
-
-    ``state_api``: ``classic`` = applyInPandasWithState (3.4+);
-    ``tws`` = transformWithStateInPandas (4.0+, value-state handles).
+    """Wire the union-tagged stateful topology (applyInPandasWithState).
 
     ``data``: streaming (id bigint, values array<double>) — wire.parse_service_tuples.
     ``triggers``: streaming (query_id string, required_count bigint).
@@ -254,13 +221,6 @@ def build_skyline_stream(
         "required_count",
     )
     unioned = tagged_data.unionByName(fanned)
-    if state_api == "tws":
-        return unioned.groupBy("pid").transformWithStateInPandas(
-            make_skyline_processor(d),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
     return unioned.groupBy("pid").applyInPandasWithState(
         _make_stateful_update(d),
         outputStructType=OUTPUT_SCHEMA,
@@ -360,19 +320,3 @@ def finalize_results(
             }
         )
     return pd.DataFrame(rows)
-
-
-def incremental_skyline_state() -> "IncrementalSkyline":
-    return IncrementalSkyline()
-
-
-class IncrementalSkyline:
-    """Driver-side incremental skyline (the reference's per-partition state
-    object, reusable for custom sinks/foreachBatch pipelines)."""
-
-    def __init__(self) -> None:
-        self.sky: np.ndarray | None = None
-
-    def update(self, batch: np.ndarray) -> np.ndarray:
-        self.sky = skyline_update(self.sky, batch)
-        return self.sky

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from query_skyline_qos_flink_spark.operators.partitioners import partition_id
@@ -1019,14 +1020,47 @@ def test_skyline_layers_single_pass_matches_peel_fallback(spark):
     assert got == exp
 
 
-def test_driver_verify_gate_parity(spark, monkeypatch):
-    """Round 16: candidate sets at or below _DRIVER_VERIFY_MAX_ROWS finish
-    driver-side (same kernels, local-relation result).  Both sides of the
-    gate must produce identical rows for skyline AND skyband — including
-    duplicates, ties, max dims and NaN policy."""
-    import numpy as np
-    import pandas as pd
+# Gate settings (_DRIVER_VERIFY_MAX_ROWS, _VERIFY_MAX_ROWS, a helper only
+# that path calls) that force each non-default global-merge path on the
+# parity corpus below; None keeps the default / checks nothing.  Sizes on
+# that corpus: skyline phase-1 union 82 rows (8 survivors), skyband k=3
+# union 241 (34 members), skycube full-space skyline 8 rows with one
+# subspace label past 300 local survivors.
+_CHUNKED = "_uniform_chunk_col"
+_GATE_PATHS = {
+    # driver off -> broadcast verify; tiny bound -> tree merge + chunked
+    "skyline": {"broadcast": (0, None, None), "chunked": (0, 20, _CHUNKED)},
+    # chunked counting: 241 > 60 and within the 32 x bound raise limit
+    "skyband": {"broadcast": (0, None, None), "chunked": (0, 60, _CHUNKED)},
+    # the band comes from the same verify; chunked = oversized-band branch
+    "top_dominating": {
+        "broadcast": (0, None, None),
+        "chunked": (0, 60, _CHUNKED),
+    },
+    # broadcast: full-space broadcast merge + grouped per-label merge;
+    # labels: a label past the bound takes the per-label skyline merge;
+    # chunked: full-space skyline past the bound -> per-subspace loop
+    "skycube": {
+        "broadcast": (0, None, None),
+        "labels": (0, 100, _CHUNKED),
+        "chunked": (0, 4, _CHUNKED),
+    },
+    # candidate set past the bound -> per-layer peel loop (each layer's
+    # skyline has at most 113 phase-1 rows, so its merge stays on the
+    # driver)
+    "skyline_layers": {"peel": (None, 120, "_skyline_layers_peel")},
+}
 
+
+@pytest.mark.parametrize("op", list(_GATE_PATHS))
+def test_driver_verify_gate_parity(spark, monkeypatch, op):
+    """Every global-merge path of the skyline family returns the rows of
+    the default (driver-side) path: candidate sets at or below
+    _DRIVER_VERIFY_MAX_ROWS finish on the driver, larger ones broadcast
+    the candidates to every task, and sets past _VERIFY_MAX_ROWS verify
+    chunk by chunk (or take the operator's oversized fallback).  Forced
+    by shrinking the gates; covers duplicates, ties, max dims and the
+    NaN policy."""
     from query_skyline_qos_flink_spark.operators import skyline as sky
 
     rng = np.random.default_rng(77)
@@ -1042,21 +1076,39 @@ def test_driver_verify_gate_parity(spark, monkeypatch):
     pdf.loc[rng.random(n) < 0.04, "y"] = np.nan
     df = spark.createDataFrame(pdf).repartition(7)
     dims = [("x", "min"), ("y", "max"), ("z", "min")]
+    run = {
+        "skyline": lambda: sky.skyline(df, dims),
+        "skyband": lambda: sky.skyband(df, dims, k=3),
+        "top_dominating": lambda: sky.top_dominating(
+            df, dims, k=3, tie_cols=["rid"]
+        ),
+        "skycube": lambda: sky.skycube(df, dims),
+        "skyline_layers": lambda: sky.skyline_layers(df, dims, n_layers=3),
+    }[op]
 
-    sky_driver = sorted(tuple(r) for r in sky.skyline(df, dims).collect())
-    band_driver = sorted(
-        tuple(r) for r in sky.skyband(df, dims, k=3).collect()
-    )
     # driver path actually engaged at the default gate for this size
     assert n <= sky._DRIVER_VERIFY_MAX_ROWS
+    default = sorted(tuple(r) for r in run().collect())
+    assert default
 
-    monkeypatch.setattr(sky, "_DRIVER_VERIFY_MAX_ROWS", 0)
-    sky_dist = sorted(tuple(r) for r in sky.skyline(df, dims).collect())
-    band_dist = sorted(
-        tuple(r) for r in sky.skyband(df, dims, k=3).collect()
-    )
-    assert sky_driver == sky_dist
-    assert band_driver == band_dist
+    for path, (driver_max, verify_max, engaged) in _GATE_PATHS[op].items():
+        calls = []
+        with monkeypatch.context() as m:
+            if driver_max is not None:
+                m.setattr(sky, "_DRIVER_VERIFY_MAX_ROWS", driver_max)
+            if verify_max is not None:
+                m.setattr(sky, "_VERIFY_MAX_ROWS", verify_max)
+            if engaged is not None:
+
+                def spy(*a, real=getattr(sky, engaged), **kw):
+                    calls.append(1)
+                    return real(*a, **kw)
+
+                m.setattr(sky, engaged, spy)
+            forced = sorted(tuple(r) for r in run().collect())
+        assert forced == default, (op, path)
+        # the forced gates actually engaged the path
+        assert engaged is None or calls, (op, path)
 
 
 def test_whole_input_driver_path_parity(spark, monkeypatch):

@@ -7,7 +7,6 @@ streams; SURVEY.md §7 M3 'rate-source harness replaces Kafka in CI').
 
 from __future__ import annotations
 
-import inspect
 import json
 import os
 
@@ -162,34 +161,6 @@ def test_streaming_barrier_holds_until_enough_records(spark, stream_dirs):
     assert "q_wait" in set(res2[res2["max_seen"] >= 0]["query_id"])
 
 
-def test_tws_backend_end_to_end(spark, stream_dirs):
-    """transformWithStateInPandas backend parity (skipped where the TWS
-    state-server protocol's protobuf dependency is unavailable)."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from pyspark.sql import GroupedData
-
-    if not hasattr(GroupedData, "transformWithStateInPandas"):
-        pytest.skip("transformWithStateInPandas requires Spark >= 4.0")
-    data_dir, query_dir, ckpt = stream_dirs
-    with open(os.path.join(data_dir, "b0.csv"), "w") as f:
-        f.write("0,5.0,5.0\n1,3.0,9.0\n")
-    with open(os.path.join(query_dir, "t0.csv"), "w") as f:
-        f.write("q_now\n")
-    from query_skyline_qos_flink_spark.streaming.skyline_stream import build_skyline_stream
-
-    data = wire.parse_service_tuples(spark.readStream.schema("value string").text(data_dir))
-    trig = wire.parse_query_triggers(spark.readStream.schema("value string").text(query_dir))
-    out = build_skyline_stream(data, trig, d=2, num_partitions=4, domain=100.0,
-                               state_api="tws")
-    q = (
-        out.writeStream.format("memory").queryName("tws_sink").outputMode("append")
-        .option("checkpointLocation", ckpt).trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    res = spark.sql("SELECT * FROM tws_sink").toPandas()
-    assert sorted(res[res["id"].notna()]["id"]) == [0, 1]
-
-
 def test_streaming_survives_wrong_arity_record(spark, stream_dirs):
     """Regression: a record with the wrong dimensionality must be dropped
     like any malformed line, not crash the stateful operator."""
@@ -292,35 +263,6 @@ def test_streaming_immediate_trigger_and_cumulative_state(spark, stream_dirs):
     assert set(res["query_id"]) == {"q_now"}
     got = res[res["id"].notna()]
     assert sorted(got["id"]) == [0, 1]
-
-
-def test_tws_skip_is_environmental_not_slack():
-    """Documented-environmental gate: test_tws_backend_end_to_end skips in
-    this container ONLY because pyspark's transformWithStateInPandas state
-    server needs `google.protobuf` at runtime and the image does not ship
-    it (and pip installs are off).  This companion asserts (a) the skip
-    reason is real — the import genuinely fails — and (b) the backend
-    itself is implemented and selectable, i.e. the skip is environment,
-    not a stub.  If protobuf ever appears, (a) flips and this test demands
-    the e2e test run instead of skipping."""
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-        pb_present = True
-    except ImportError:
-        pb_present = False
-    from pyspark.sql import GroupedData
-
-    from query_skyline_qos_flink_spark.streaming import skyline_stream
-
-    # the TWS path exists regardless of the environment gate
-    assert hasattr(GroupedData, "transformWithStateInPandas")
-    src = inspect.getsource(skyline_stream.build_skyline_stream)
-    assert 'state_api == "tws"' in src
-    if pb_present:
-        pytest.fail(
-            "protobuf is importable now — remove the environmental-skip "
-            "documentation and let test_tws_backend_end_to_end run"
-        )
 
 
 def test_continuous_soak_ten_batches_cumulative_across_queries(spark, stream_dirs):
