@@ -13,12 +13,15 @@ operator's fence — e.g. a burst of skyline tree-merge persists never
 evicts the minhash shingle cache mid-build.  A global cap still bounds
 total pinned storage across scopes, evicting oldest-first globally only
 when the session-wide total exceeds it.
+
+The registry is plain module state, updated in several steps with no
+lock: it assumes one driver thread builds plans, and no operator or
+query builds from several threads.
 """
 
 from __future__ import annotations
 
 import inspect
-import threading
 
 from pyspark.sql import DataFrame
 
@@ -26,10 +29,6 @@ _PERSISTED: dict[str, list[DataFrame]] = {}
 _ORDER: list[tuple[str, DataFrame]] = []  # global FIFO across scopes
 _KEEP_PER_SCOPE = 4
 _KEEP_GLOBAL = 16
-# Registry mutations are multi-step (scan-then-remove-then-append); driver
-# threads submitting independent jobs (guide §2.6 overlap — m2 runs its two
-# strategy pipelines concurrently) must not interleave them.
-_LOCK = threading.RLock()
 
 
 def _caller_scope() -> str:
@@ -74,11 +73,6 @@ def _same_semantics(a: DataFrame, b: DataFrame) -> bool:
 
 def persist_bounded(df: DataFrame, scope: str | None = None) -> DataFrame:
     scope = scope or _caller_scope()
-    with _LOCK:
-        return _persist_bounded_locked(df, scope)
-
-
-def _persist_bounded_locked(df: DataFrame, scope: str) -> DataFrame:
     # Spark's CacheManager dedupes persist() by logical plan: two
     # semantically identical frames share ONE cache entry.  Registering
     # a plan-twin as a new FIFO entry would make the later eviction

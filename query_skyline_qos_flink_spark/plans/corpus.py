@@ -19,8 +19,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.dominance import skyline_oracle_sql
-from ..operators.caching import persist_bounded as _persist_corpus
-from ..operators.metrics import skyline_partition_stats
+from ..operators.metrics import partition_stats, skyline_partition_stats
 from ..operators.partitioners import partition_id
 from ..operators.prefix import exact_prefix
 from ..operators.skyline import (
@@ -986,58 +985,18 @@ FROM sizes s LEFT JOIN surv v ON s.pid = v.pid
     "experiment): m1's Optimality building blocks computed under MR-Dim "
     "AND MR-Grid side by side, labeled — which spatial keying prunes "
     "better on this data is the question the reference's evaluation "
-    "asks. One persisted scan feeds both stats passes; integer-only "
-    "output. MR-Angle is compared under the partition-independent "
-    "oracle instead (s9_twophase_angle) because atan2 is not "
+    "asks. One global skyline serves both strategies, tagged with each "
+    "strategy's pid after the merge, and one local pass sizes every "
+    "strategy's partitions; integer-only output. MR-Angle is compared "
+    "under the partition-independent oracle instead "
+    "(s9_twophase_angle) because atan2 is not "
     "cross-engine bit-pinned — see _m2_oracle",
 )
 def m2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _persist_corpus(load(spark, sf_dir, "lineitem"))
-    li.count()  # materialize the shared cache ONCE before the threads fork
-    # ONE data-derived domain for both strategies (r16): each
-    # skyline_partition_stats call with domain=None re-aggregates
-    # max(dim0) and re-broadcasts it into its local-phase plan — the same
-    # number both times.  One tiny agg over the materialized cache, then
-    # a literal, removes a full-input aggregate + crossJoin subplan from
-    # each strategy's checkpointed plan.  Identical pid math: the literal
-    # IS with_data_domain's value.
-    mx = li.agg(F.max(F.col("l_extendedprice").cast("double"))).first()[0]
-    # empty/fully-NULL input: fall back to the per-call data-derived
-    # domain (NULL domain column), exactly the former graceful behavior
-    domain = float(mx) if mx is not None else None
-    # Overlap the two independent strategy pipelines (guide §2.6): each
-    # stats build is a chain of small driver-blocking actions (the eager
-    # local-phase checkpoint, the merge's persist/count, the verify
-    # broadcast pull) whose jobs are only 8-32 tasks wide — run them from
-    # two driver threads so the second strategy's local phase back-fills
-    # the cores the first one's actions leave idle.  Result is unchanged:
-    # the union below fixes the plan order, and each pipeline is
-    # independent (the persist registry is lock-guarded).
-    from pyspark import InheritableThread
-
-    results: dict[str, DataFrame] = {}
-    errors: dict[str, BaseException] = {}
-
-    def build(st: str) -> None:
-        try:
-            results[st] = skyline_partition_stats(
-                li,
-                ["l_extendedprice", "l_discount"],
-                strategy=st,
-                num_partitions=8,
-                domain=domain,
-            ).select(F.lit(st).alias("strategy"), "pid", "local_size", "survivors")
-        except BaseException as exc:  # noqa: BLE001 - re-raised on the caller
-            errors[st] = exc
-
-    threads = [InheritableThread(target=build, args=(st,)) for st in ("dim", "grid")]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    if errors:
-        raise next(iter(errors.values()))
-    return results["dim"].unionByName(results["grid"])
+    li = load(spark, sf_dir, "lineitem")
+    return partition_stats(
+        li, ["l_extendedprice", "l_discount"], ["dim", "grid"], num_partitions=8
+    )
 
 
 @register(

@@ -738,8 +738,10 @@ _STREAMING = (
 _FAMILY_REP = (
     "same operator code path as a pinned family representative "
     "(s1 scan-prune/broadcast-verify, s7 pushdown, s22/s27-s31/s34 pinned "
-    "individually; two-phase strategies share the skyline_with_pid plan "
-    "pinned via s9_twophase_dim's m2 stats twin and test_skyline_op.py)"
+    "individually; the s9 two-phase strategies share the skyline_with_pid "
+    "plan, checked in test_skyline_op.py; m1/m2's partition stats are "
+    "skyline()'s plan plus one groupBy(strategy, pid) local pass, checked "
+    "by test_skyline_op.py's partition-stats tests)"
 )
 _SCAN_AGG = (
     "map-only column expressions and/or one partially-aggregated groupBy "

@@ -151,31 +151,73 @@ def test_generic_path_3d_matches_brute(spark):
     assert got == _brute(pdf, ["x", "y", "z"], [1, 1, 1])
 
 
-def test_partition_stats_parallel_merge(spark):
-    """m1's global merge must be the parallel broadcast-verify, not a
-    single-task pass (the reference's own 4-D bottleneck, PDF §5.5):
-    correct stats vs brute force AND no single-partition exchange in the
-    executed plan."""
+def _stats_input(spark, kind: str, d: int):
+    """``anti``: seeded anti-correlated points in [0, 1000].  ``boundary``:
+    every coordinate a multiple of 125 = 1000 / 8 (so each v0 sits exactly
+    on an MR-Dim bucket edge, and 500 is the MR-Grid split), drawn from 9
+    values per dim, so most points are exact duplicates."""
+    if kind == "anti":
+        return points(spark, 4000, d, "anti_correlated", domain=1000, seed=9)
+    rng = np.random.default_rng(17)
+    pdf = pd.DataFrame(
+        {f"v{i}": rng.integers(0, 9, 1500).astype(float) * 125.0 for i in range(d)}
+    )
+    pdf["id"] = np.arange(1500)
+    return spark.createDataFrame(pdf).repartition(5)
+
+
+@pytest.mark.parametrize("kind", ["anti", "boundary"])
+@pytest.mark.parametrize("d", [2, 3])
+@pytest.mark.parametrize("strategy", ["dim", "grid", "angle"])
+def test_partition_stats_parallel_merge(spark, strategy, d, kind):
+    """Per-partition stats vs brute force, for every strategy, and no
+    single-partition exchange in the executed plan (the reference merges
+    on one thread, its own 4-D bottleneck, PDF §5.5).  Pids come from the
+    partitioner's own column expression: this checks the stats, not the
+    partitioner."""
     from query_skyline_qos_flink_spark.operators.metrics import skyline_partition_stats
 
-    df = points(spark, 4000, 2, "anti_correlated", domain=1000, seed=9)
+    dims = [f"v{i}" for i in range(d)]
+    df = _stats_input(spark, kind, d)
     stats = skyline_partition_stats(
-        df, ["v0", "v1"], strategy="dim", num_partitions=8, domain=1000.0
+        df, dims, strategy=strategy, num_partitions=8, domain=1000.0
     )
     got = stats.toPandas().set_index("pid").sort_index()
 
-    pdf = df.toPandas()
-    pid = np.clip(np.floor(pdf["v0"] / (1000.0 / 8)), 0, 7).astype(int)
-    sky = _brute(pdf[["v0", "v1"]], ["v0", "v1"], [1, 1])
-    surv_pid = pid[[tuple(r) in sky for r in pdf[["v0", "v1"]].itertuples(index=False)]]
+    pdf = df.withColumn("pid", partition_id(strategy, dims, 8, 1000.0)).toPandas()
+    pid = pdf["pid"]
+    sky = _brute(pdf[dims], dims, [1] * d)
+    surv_pid = pid[[tuple(r) in sky for r in pdf[dims].itertuples(index=False)]]
+    assert set(got.index) == set(pid), "one row per non-empty partition"
     for p in got.index:
-        sub = pdf[pid == p]
-        local = _brute(sub, ["v0", "v1"], [1, 1])
-        assert got.loc[p, "local_size"] == len(local), p
+        sub = pdf.loc[pid == p, dims]
+        local_size = int(skyline_mask_brute(sub.to_numpy(dtype=float)).sum())
+        assert got.loc[p, "local_size"] == local_size, p
         assert got.loc[p, "survivors"] == int((surv_pid == p).sum()), p
 
     plan = stats._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
+
+
+def test_partition_stats_all_strategies_match_single_calls(spark):
+    """One multi-strategy call (data-derived domain, resolved once) returns
+    exactly the rows of the per-strategy calls, labeled by strategy."""
+    from query_skyline_qos_flink_spark.operators.metrics import (
+        partition_stats,
+        skyline_partition_stats,
+    )
+
+    df = points(spark, 4000, 3, "anti_correlated", domain=1000, seed=9)
+    dims = ["v0", ("v1", "max"), "v2"]
+    strategies = ["dim", "grid", "angle"]
+    got = sorted(map(tuple, partition_stats(df, dims, strategies).collect()))
+    want = sorted(
+        (s, *r)
+        for s in strategies
+        for r in map(tuple, skyline_partition_stats(df, dims, strategy=s).collect())
+    )
+    assert got == want
+    assert {r[0] for r in got} == set(strategies)
 
 
 def test_2d_two_pass_prefix_min_many_range_partitions(spark, monkeypatch):
@@ -951,37 +993,6 @@ def test_chunked_skyband_counts_match_bounded_path(spark):
             sky.skyband(df, ["v0", "v1", "v2"], k=3).count()
     finally:
         sky._VERIFY_MAX_ROWS = old
-
-
-def test_partition_stats_scan_side_prune_route_parity(spark, monkeypatch):
-    """The wide-cluster route: when session parallelism dwarfs the spatial
-    partition count, skyline_partition_stats pre-prunes on the scan
-    splits before the pid exchange (exact: the skyline of a union is the
-    skyline of the union of per-slice skylines).  Forcing the route must
-    reproduce the direct route's stats EXACTLY against brute force."""
-    from query_skyline_qos_flink_spark.operators import metrics as M
-
-    df = points(spark, 4000, 2, "anti_correlated", domain=1000, seed=9)
-    direct = M.skyline_partition_stats(
-        df, ["v0", "v1"], strategy="dim", num_partitions=8, domain=1000.0
-    ).toPandas().set_index("pid").sort_index()
-    monkeypatch.setattr(M, "_PRUNE_PARALLELISM_FACTOR", 0)
-    # the route actually engaged: the pre-prune is the ONLY _fanout call
-    # site in skyline_partition_stats (the former probe grepped the final
-    # plan for MapInPandas, but since r16 the merge finishes driver-side
-    # and the prune pass itself runs under the eager checkpoint — neither
-    # appears in the final plan)
-    calls = []
-    real_fanout = M._fanout
-    monkeypatch.setattr(
-        M, "_fanout", lambda frame: calls.append(1) or real_fanout(frame)
-    )
-    pruned_df = M.skyline_partition_stats(
-        df, ["v0", "v1"], strategy="dim", num_partitions=8, domain=1000.0
-    )
-    assert calls, "scan-side pre-prune route did not engage"
-    pruned = pruned_df.toPandas().set_index("pid").sort_index()
-    assert pruned.equals(direct)
 
 
 def test_skyline_layers_single_pass_matches_peel_fallback(spark):

@@ -14,17 +14,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import _proc_stat as _stat  # noqa: E402
 from query_skyline_qos_flink_spark.plans import corpus  # noqa: E402
 from query_skyline_qos_flink_spark.plans import pipeline, relational  # noqa: E402, F401
 from query_skyline_qos_flink_spark.session import get_spark  # noqa: E402
-
-
-def _stat():
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    tck = os.sysconf("SC_CLK_TCK")
-    names = ("user", "nice", "system", "idle", "iowait", "irq", "softirq", "steal")
-    return {n: int(v) / tck for n, v in zip(names, parts[1:9])}
 
 
 def main() -> None:

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F  # noqa: E402
 from query_skyline_qos_flink_spark.operators.metrics import (  # noqa: E402
     optimality,
     skyline_partition_stats,
-    with_data_domain,
 )
 from query_skyline_qos_flink_spark.operators.skyline import skyline  # noqa: E402
 from query_skyline_qos_flink_spark.session import get_spark  # noqa: E402
