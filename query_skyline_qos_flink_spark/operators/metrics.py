@@ -105,10 +105,14 @@ def skyline_partition_stats(
 
 def optimality(stats: DataFrame, num_partitions: int) -> DataFrame:
     """Scalar Optimality from :func:`skyline_partition_stats` output
-    (float; kept out of the oracle-compared surface by design)."""
+    (float; kept out of the oracle-compared surface by design).  The
+    survivors/local_size ratios are folded left to right in pid order,
+    so the last bits depend only on the integer stats, not on the row
+    order of whatever physical plan produced them."""
+    ratio = (F.col("survivors") / F.col("local_size")).alias("r")
+    ratios = F.array_sort(F.collect_list(F.struct("pid", ratio)))
+    total = F.aggregate(ratios, F.lit(0.0), lambda acc, x: acc + x["r"])
     return stats.agg(
-        (F.sum(F.col("survivors") / F.col("local_size")) / F.lit(float(num_partitions))).alias(
-            "optimality"
-        ),
+        (total / F.lit(float(num_partitions))).alias("optimality"),
         F.sum("survivors").alias("skyline_size"),
     )

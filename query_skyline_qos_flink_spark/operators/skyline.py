@@ -29,24 +29,26 @@ join: by shape.
   cached survivors (one tree-merge round first if they exceed
   ``_VERIFY_MAX_ROWS``) and hands them to :func:`_verify`, the family's
   one global pass, which picks the physical path by size:
-  - ``n <= _DRIVER_VERIFY_MAX_ROWS`` — collect once, finish on the
-    driver with the same kernel, re-enter as a local relation;
-  - ``n <= _VERIFY_MAX_ROWS`` — **broadcast-verify**: ship the survivor
-    dim-matrix to every task and drop dominated rows in parallel.  This
-    replaces the reference's single-threaded global BNL — the PDF's own
-    bottleneck (§5.5) — with an embarrassingly parallel pass, valid
-    because every non-survivor is dominated by some survivor
-    (transitivity);
-  - larger — chunked: one broadcast pass per ``_VERIFY_MAX_ROWS``-row
-    uniform chunk of the survivors.
+  - ``n <= _DRIVER_VERIFY_MAX_ROWS`` (and within ``_VERIFY_MAX_ROWS``)
+    — collect once, finish on the driver with the same kernel, re-enter
+    as a local relation;
+  - larger — **distributed verify**: collect the survivor dim-matrix
+    once, cut it into ``ceil(n / _VERIFY_MAX_ROWS)`` sum-sorted stride
+    slices, broadcast them, and drop dominated rows in ONE parallel
+    pass that meets every slice in turn.  This replaces the reference's
+    single-threaded global BNL — the PDF's own bottleneck (§5.5) — with
+    an embarrassingly parallel pass, valid because every non-survivor
+    is dominated by some survivor (transitivity).
   The same dispatch finishes the k-skyband (and through it
   top-dominating) with a dominator-count kernel, and the skycube's
   full-space and per-subspace merges.
 
 At 100 TB: phase 1 parallelism = input splits; shuffle volume is
 ``O(sum of local skyline sizes)``, not ``O(input)``; every broadcast is
-dims only (d doubles/row) and at most ``_VERIFY_MAX_ROWS`` rows.  No
-driver-side collect of anything larger than the survivor dim-matrix.
+dims only (d doubles/row) and at most ``_VERIFY_MAX_ROWS`` rows per
+slice, but every verify task loads all slices, so a Python worker holds
+the whole candidate dim-matrix.  No driver-side collect of anything
+larger than the survivor dim-matrix.
 
 MAX dimensions are handled by negation; duplicates/ties are retained
 (SURVEY.md §1.1); rows with NULL/NaN in any skyline dimension are excluded
@@ -63,7 +65,6 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .caching import persist_balanced as _persist_balanced
 from .caching import persist_bounded as _persist
-from .caching import release_local_checkpoint
 from .fanout import fanout_narrow_scan as _fanout
 from .joins import null_safe_semi_join
 from .layout import range_bucket
@@ -72,15 +73,16 @@ from .skyline_kernel import (
     dominance_planes,
     dominated_mask_vs_sorted,
     exact_f32,
+    frontier_2d,
     skyline_mask,
     sums_exact,
 )
 
 _PREP = "__sk_"
 
-# Max candidate rows for one broadcast-verify pass (see _verify); above
-# this the skyline merge runs a tree-merge round first, and the verify
-# goes chunk by chunk.
+# Max candidate rows per broadcast slice of the distributed verify (see
+# _verify: n candidates ship as ceil(n / this) slices, all met in one
+# pass); above this the skyline merge runs a tree-merge round first.
 _VERIFY_MAX_ROWS = 400_000
 # Candidate sets at or below this row count finish DRIVER-side: the same
 # chunked numpy kernels the distributed verify broadcasts run once on the
@@ -88,9 +90,9 @@ _VERIFY_MAX_ROWS = 400_000
 # as a local relation.  The distributed verify pass exists to spread
 # O(n x m) comparison volume across cores, but at m <= this bound the
 # whole candidate-vs-candidate block is <= ~2.7e8 boolean ops (~0.2 s on
-# one core) while the distributed form pays 1-2 extra driver round-trips
-# plus a python-worker broadcast pass per call — pure fixed latency at
-# bench scale and wasted scheduling at cluster scale (guide §1.2: remove
+# one core) while the distributed form pays a dims-collect job plus a
+# python-worker broadcast pass per call — pure fixed latency at bench
+# scale and wasted scheduling at cluster scale (guide §1.2: remove
 # passes before tuning them).  Results are identical: same kernel, same
 # duplicate-retention policy (the skyline-merge monoid).  Read only by
 # _verify.
@@ -262,31 +264,6 @@ def _grouped_skyline(prep_cols: list[str]):
     return fn
 
 
-def _frontier_2d(d0: np.ndarray, d1: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Exact 2-D frontier of (d0, d1) pairs, both minimized: per distinct
-    d0 keep the min d1, then keep the pairs whose strict-predecessor
-    running min (in d0 order) exceeds their d1.  Pure comparisons and
-    mins — no arithmetic — so it is float-exact and matches the
-    relational ``groupBy(d0).min(d1)`` + strict-prefix-min plan bit for
-    bit.  The frontier is a skyline-merge monoid (``F(A ∪ B) =
-    F(F(A) ∪ F(B))``), which is what makes the per-partition partial +
-    driver merge below exact."""
-    n = d0.shape[0]
-    if n == 0:
-        return d0, d1
-    order = np.lexsort((d1, d0))  # by d0, ties by d1: first-per-d0 = min d1
-    d0s, d1s = d0[order], d1[order]
-    first = np.empty(n, dtype=bool)
-    first[0] = True
-    np.not_equal(d0s[1:], d0s[:-1], out=first[1:])
-    d0u, d1u = d0s[first], d1s[first]
-    pm = np.minimum.accumulate(d1u)
-    keep = np.empty(d0u.shape[0], dtype=bool)
-    keep[0] = True
-    np.greater(pm[:-1], d1u[1:], out=keep[1:])
-    return d0u[keep], d1u[keep]
-
-
 def _frontier_2d_partial(d0_name: str, d1_name: str):
     """mapInArrow function: per-partition (d0, min-d1) frontier pairs.
     Buffer-and-compact (the skyband cadence): the running frontier is
@@ -303,7 +280,7 @@ def _frontier_2d_partial(d0_name: str, d1_name: str):
 
         def compact() -> None:
             nonlocal b0, b1, buffered
-            f0, f1 = _frontier_2d(np.concatenate(b0), np.concatenate(b1))
+            f0, f1 = frontier_2d(np.concatenate(b0), np.concatenate(b1))
             b0, b1, buffered = [f0], [f1], f0.shape[0]
 
         for batch in batches:
@@ -344,7 +321,7 @@ def _frontier_2d_collect(prepped: DataFrame, prep_cols: list[str]):
     if pairs.count() > _2D_FRONTIER_DRIVER_MAX_ROWS:
         return pairs, None
     tbl = pairs.toArrow()
-    return pairs, _frontier_2d(
+    return pairs, frontier_2d(
         tbl.column(0).to_numpy(zero_copy_only=False),
         tbl.column(1).to_numpy(zero_copy_only=False),
     )
@@ -372,7 +349,7 @@ def _skyline_2d_relational(
         # remove the exchange outright).  The former shape paid a full
         # groupBy(d0) hash exchange over every distinct d0 (600k rows at
         # the bench shape) plus a two-pass range-partitioned window and
-        # THREE driver actions; the frontier monoid (see _frontier_2d)
+        # THREE driver actions; the frontier monoid (see frontier_2d)
         # means only local-frontier pairs ever leave a partition, one
         # count job gates the pull, and the exact merge runs once on the
         # driver.  Past the gate the pairs feed the former relational
@@ -486,55 +463,76 @@ def _skyline_2d_relational(
     return null_safe_semi_join(prepped, surv, eq_cols=[d0, d1], null_safe_cols=keys)
 
 
+def _stride_slices(*arrays: np.ndarray):
+    """Cut row-aligned arrays into ``ceil(rows / _VERIFY_MAX_ROWS)``
+    stride slices ``a[i::n]``, one tuple per slice.  Cut from a
+    sum-sorted matrix, every slice spans the whole sum range and stays
+    sum-sorted for the filter's prefix pruning; slice sizes are bounded
+    by position, so an all-duplicates reference cannot collapse into one
+    oversized slice (the r10 dim-hash failure).  One slice is the arrays
+    themselves."""
+    n = -(-arrays[0].shape[0] // _VERIFY_MAX_ROWS)
+    return [tuple(a[i::n] for a in arrays) for i in range(n)]
+
+
 def _broadcast_verify(
     cur: DataFrame, prep_cols: list[str], ref: DataFrame | None = None
 ) -> DataFrame:
-    """One broadcast pass of the skyline filter: every task checks its
+    """One parallel pass of the skyline filter: every task checks its
     rows against the full reference dim-matrix and drops the dominated
-    ones (self/duplicate pairs fail the strict test).
+    ones (self/duplicate pairs fail the strict test).  The matrix ships
+    as :func:`_stride_slices` broadcasts, met one after the other per
+    Arrow batch; a row drops at the first slice that dominates it.
+    Slicing bounds each broadcast, not a worker: every task loads all
+    slices, so it holds the whole n x d matrix, as one broadcast would,
+    and the filter prunes no more than ``dominated_mask_vs_sorted``
+    already does over one sum-sorted matrix.  The slices are kept so the
+    skyline filter and the dominator count share one slicing (the count
+    needs it: its running counts drop a row at ``k`` between slices);
+    below ``_VERIFY_MAX_ROWS`` candidates there is one slice.
 
-    ``ref`` (default: ``cur`` itself) supplies the reference matrix; the
-    chunked merge passes one uniform chunk of the candidates per pass,
-    and passing a known skyline lets callers re-verify an arbitrary row
-    set against it — e.g. bench.py's 1M sizecheck runs the WHOLE input
+    ``ref`` (default: ``cur`` itself) supplies the reference matrix;
+    passing a known skyline lets callers re-verify an arbitrary row set
+    against it — e.g. bench.py's 1M sizecheck runs the WHOLE input
     through this with the distributed result as ``ref``: the surviving
     row count equals the result count iff the result is exactly the
     skyline (a false survivor would be dominated and drop; a missed
     survivor would pass and add)."""
-    spark = cur.sparkSession
     self_ref = ref is None
-    dims_pdf = (cur if self_ref else ref).select(*prep_cols).toPandas()
-    arr = np.ascontiguousarray(dims_pdf.to_numpy(dtype=np.float64))
+    arr = _dim_matrix((cur if self_ref else ref).select(*prep_cols).toArrow(), prep_cols)
     ssum = arr.sum(axis=1)
     order = np.argsort(ssum, kind="stable")
     arr, ssum = arr[order], ssum[order]
     exact = sums_exact(arr)
     # exact f32 fast path (integer-domain data): halves comparison traffic.
     # When ref IS the candidate set (self_ref), the flags computed from
-    # ``arr`` cover the candidates too, so the f32 matrix can be broadcast
-    # directly.  When ref is an EXTERNAL reference (chunked merge, verify
-    # probes), the candidates may not share ref's exactness — deciding the
-    # fast paths from ref alone corrupts results (r10 ADVICE: an f32-exact
-    # ref chunk vs a non-f32-representable candidate like 0.1 reports
-    # domination that f64 denies) — so broadcast the f64 matrix plus the
-    # ref-side eligibility flags and re-qualify PER CANDIDATE BATCH below.
+    # the whole collected ``arr`` cover every candidate, so the f32 matrix
+    # is broadcast directly.  When ref is an EXTERNAL reference
+    # (skyline_verify_count), the candidates may not share ref's
+    # exactness — deciding the fast paths from ref alone corrupts results
+    # (r10 ADVICE: an f32-exact ref vs a non-f32-representable candidate
+    # like 0.1 reports domination that f64 denies) — so broadcast the f64
+    # matrix plus the ref-side eligibility flags and re-qualify PER
+    # CANDIDATE BATCH below.
     f32 = exact_f32(arr)
-    if self_ref and f32 is not None:
-        arr = np.ascontiguousarray(f32)
-    bc = spark.sparkContext.broadcast((arr, ssum, f32 is not None, exact, self_ref))
+    ref_f32_ok = f32 is not None
+    if self_ref and ref_f32_ok:
+        arr = f32
+    sc = cur.sparkSession.sparkContext
+    bcs = [sc.broadcast(s) for s in _stride_slices(arr, ssum)]
 
     def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sky, sky_sum, ref_f32_ok, ref_exact, self_mode = bc.value
-        sky32 = sky if sky.dtype == np.float32 else None
+        refs = [b.value for b in bcs]
+        refs32 = None
         for pdf in batches:
             if pdf.empty:
                 continue
             pts = pdf[prep_cols].to_numpy(dtype=np.float64)
             psum = pts.sum(axis=1)
-            if self_mode:
+            if self_ref:
                 # candidates are ref rows: ref-wide flags already cover them
                 cand, work, exact_mode = (
-                    pts.astype(np.float32) if ref_f32_ok else pts, sky, ref_exact
+                    pts.astype(np.float32) if ref_f32_ok else pts, refs, exact
                 )
             else:
                 # fast paths only when this batch qualifies too: exact-sum
@@ -542,16 +540,24 @@ def _broadcast_verify(
                 # needs both sides losslessly representable (the general
                 # f64 path is exact for arbitrary floats, so disqualifying
                 # a batch costs speed, never correctness)
-                exact_mode = ref_exact and sums_exact(pts)
+                exact_mode = exact and sums_exact(pts)
                 cand32 = exact_f32(pts) if ref_f32_ok else None
                 if cand32 is not None:
-                    if sky32 is None:
-                        sky32 = sky.astype(np.float32)
-                    cand, work = cand32, sky32
+                    if refs32 is None:
+                        refs32 = [(s.astype(np.float32), ss) for s, ss in refs]
+                    cand, work = cand32, refs32
                 else:
-                    cand, work = pts, sky
-            dom = dominated_mask_vs_sorted(cand, psum, work, sky_sum, exact=exact_mode)
-            out = pdf.loc[~dom]
+                    cand, work = pts, refs
+            rows = None  # positions still alive; None = all of them
+            for sky, sky_sum in work:
+                dom = dominated_mask_vs_sorted(cand, psum, sky, sky_sum, exact=exact_mode)
+                if dom.any():
+                    live = ~dom
+                    cand, psum = cand[live], psum[live]
+                    rows = np.flatnonzero(live) if rows is None else rows[live]
+                    if not rows.size:
+                        break
+            out = pdf if rows is None else pdf.iloc[rows]
             if not out.empty:
                 yield out
 
@@ -569,29 +575,43 @@ def _dim_matrix(tbl, prep_cols: list[str]) -> np.ndarray:
 def _verify(frame: DataFrame, n: int, kernel: "_Verify"):
     """THE global pass of the skyline family: finish the ``n`` counted,
     cached phase-1 candidates in ``frame`` with ``kernel``, on one of
-    three physical paths chosen by size — the one place that choice is
+    two physical paths chosen by size — the one place that choice is
     made:
 
-    * ``n <= _DRIVER_VERIFY_MAX_ROWS`` — driver: collect once, run the
-      kernel on the driver, re-enter as a local relation
-      (:func:`_finish_on_driver`);
-    * ``n <= _VERIFY_MAX_ROWS`` — broadcast: ship the candidate
-      dim-matrix to every task and verify in parallel;
-    * otherwise — chunked: verify against ``<= _VERIFY_MAX_ROWS``-row
-      uniform chunks of the candidates, one broadcast pass per chunk.
+    * ``n > _VERIFY_MAX_ROWS`` or ``n > _DRIVER_VERIFY_MAX_ROWS`` —
+      distributed (``kernel.distributed``): collect the candidates' dim
+      columns once (sorted by coordinate sum for the skyline filter's
+      prefix pruning), broadcast them as
+      ``ceil(n / _VERIFY_MAX_ROWS)`` stride slices
+      (:func:`_stride_slices`) and run ONE ``mapInPandas`` that meets
+      every slice in turn per Arrow batch, dropping a row as soon as
+      its outcome is known.  One slice is the plain broadcast-verify;
+    * otherwise — driver: collect once, run the kernel on the driver,
+      re-enter as a local relation (:func:`_finish_on_driver`).
 
-    The broadcast bound is tested first, so no path ever holds more than
-    ``_VERIFY_MAX_ROWS`` candidates, whatever the two gates are set to.
+    The broadcast bound is tested first, so neither the driver kernel
+    nor a broadcast slice ever holds more than ``_VERIFY_MAX_ROWS``
+    candidates, whatever the two gates are set to.  Slices compose
+    exactly because both kernels compose over ANY partition of
+    the reference set (property-tested): a row survives the skyline
+    filter iff no slice dominates it, and dominator counts add up across
+    slices (counts only grow, so a row drops once its running count
+    reaches ``k``).  A row meeting its own slice is harmless (the strict
+    test never counts self or duplicate pairs).  The slices are cut from
+    the collected matrix by position on the driver, so nothing about
+    them can recompute differently on a task retry.  Total work
+    O(n x |result|) across all cores; this replaced a ``repartition(1)``
+    single-task merge (10M 4-D anti-correlated points, ~1M survivors:
+    >10 min on one task, under a minute distributed).
+
     Every path runs the same kernel over the same candidate set, so the
     rows are identical (forced-gate parity test).  Returns ``(result,
     kept Arrow table)``; the table is None off the driver path, and
     callers that need the rows driver-side reuse it instead of paying a
     collect job."""
-    if n > _VERIFY_MAX_ROWS:
-        return kernel.chunked(frame, n), None
-    if n <= _DRIVER_VERIFY_MAX_ROWS:
-        return _finish_on_driver(frame, kernel.on_driver, kernel.col)
-    return kernel.broadcast(frame), None
+    if n > _VERIFY_MAX_ROWS or n > _DRIVER_VERIFY_MAX_ROWS:
+        return kernel.distributed(frame, n), None
+    return _finish_on_driver(frame, kernel.on_driver, kernel.col)
 
 
 def _finish_on_driver(frame: DataFrame, kernel, col: str | None = None):
@@ -616,72 +636,28 @@ def _finish_on_driver(frame: DataFrame, kernel, col: str | None = None):
 class _Verify:
     """A global-pass kernel for :func:`_verify`.  Subclasses give the
     driver form (``on_driver(tbl) -> (keep, values)``; ``col`` names the
-    appended ``values`` column, None when nothing is appended) and one
-    broadcast pass against a reference matrix (``against(frame, ref,
-    first)``; ``ref`` None = the candidates themselves, ``first`` marks
-    the first pass of a chunk chain)."""
+    appended ``values`` column, None when nothing is appended) and the
+    distributed form (``distributed(frame, n)``: one pass over the ``n``
+    candidates in ``frame``)."""
 
     col: str | None = None
 
     def __init__(self, prep_cols: list[str]):
         self.prep_cols = prep_cols
 
-    def broadcast(self, frame: DataFrame) -> DataFrame:
-        return self.against(frame, None, True)
-
-    def chunked(self, frame: DataFrame, n: int) -> DataFrame:
-        """Verify against ``<= _VERIFY_MAX_ROWS``-row chunks of the
-        candidates, one broadcast pass per chunk, chained lazily.  Exact
-        because both kernels compose over ANY partition of the reference
-        set (property-tested): a row survives the skyline filter iff no
-        chunk dominates it, and dominator counts add up across chunks
-        (rows drop the moment the running count reaches ``k`` — counts
-        only grow).  A row meeting its own chunk is harmless (the strict
-        test never counts self or duplicate pairs).  Total work
-        O(n x |result|) across all cores with O(_VERIFY_MAX_ROWS x d)
-        broadcast per pass; it replaced a ``repartition(1)`` single-task
-        merge (10M 4-D anti-correlated points, ~1M survivors: >10 min on
-        one task, under a minute here).
-
-        Chunks are a uniform row key (:func:`_uniform_chunk_col`), NOT a
-        dim hash, so an all-duplicates corpus cannot collapse into one
-        oversized chunk.  The row key is unstable under recomputation, so
-        the assignment is pinned with an eager ``localCheckpoint``
-        (fail-stop on block loss, where an evicted ``persist`` would
-        silently recompute a different, overlapping assignment — r11
-        ADVICE).  Its lifetime is this loop: every pass pulls its chunk
-        eagerly, the returned chain references only ``frame`` and the
-        broadcasts, so the checkpoint is released on exit.  (An
-        ascending-coordinate-sum chunk ORDER for the counting chain was
-        A/B-probed at 10M 3-D k=4 and reverted: 285 s cold / 173 s warm
-        vs uniform's 294 / 177 — noise; SCALE.md.)"""
-        n_chunks = -(-n // _VERIFY_MAX_ROWS)
-        assign = (
-            frame.select(*self.prep_cols)
-            .withColumn("__vchunk", _uniform_chunk_col(n_chunks))
-            .localCheckpoint(eager=True)
-        )
-        try:
-            for i in range(n_chunks):
-                ref = assign.where(F.col("__vchunk") == i).drop("__vchunk")
-                frame = self.against(frame, ref, i == 0)
-        finally:
-            release_local_checkpoint(assign)
-        return frame
-
 
 class _SkylineFilter(_Verify):
     """The skyline merge kernel: keep the candidates no candidate strictly
     dominates.  On the driver ``SKY(candidates)`` via :func:`skyline_mask`
-    equals the verify-vs-self result by the skyline-merge monoid;
-    distributed passes are :func:`_broadcast_verify` with its f32 and
+    equals the verify-vs-self result by the skyline-merge monoid; the
+    distributed form is :func:`_broadcast_verify` with its f32 and
     exact-sum fast paths."""
 
     def on_driver(self, tbl):
         return skyline_mask(_dim_matrix(tbl, self.prep_cols)), None
 
-    def against(self, frame, ref, first):
-        return _broadcast_verify(frame, self.prep_cols, ref)
+    def distributed(self, frame, n):
+        return _broadcast_verify(frame, self.prep_cols)
 
 
 class _DominatorCount(_Verify):
@@ -689,10 +665,11 @@ class _DominatorCount(_Verify):
     union, keeping rows with fewer than ``k`` and appending the count as
     ``col``.  Exact for true members (B1: all their dominators are in the
     union) and exclusion-certifying for false survivors (B3), whether the
-    O(m^2) block runs once on the driver or in every task.  Counts do not
-    tree-merge, so unions past ``_TREE_FANOUT x _VERIFY_MAX_ROWS`` (~12.8M
-    rows, >3 GB of stacked float64 chunk broadcasts per worker at d=4)
-    raise — at that band volume the query itself is mis-specified."""
+    O(m^2) block runs once on the driver or slice by slice in every task.
+    Counts do not tree-merge, so unions past ``_TREE_FANOUT x
+    _VERIFY_MAX_ROWS`` (~12.8M rows, ~410 MB of float64 slices in every
+    Python worker at d=4) raise — at that band volume the query itself is
+    mis-specified."""
 
     def __init__(self, prep_cols: list[str], k: int, col: str):
         super().__init__(prep_cols)
@@ -703,46 +680,43 @@ class _DominatorCount(_Verify):
         counts = _count_dominators_vs(arr, arr)
         return counts < self.k, counts
 
-    def against(self, frame, ref, first):
+    def distributed(self, frame, n):
         from pyspark.sql.types import LongType, StructField, StructType
 
-        cols, k, col = self.prep_cols, self.k, self.col
-        ref_pdf = (frame if ref is None else ref).select(*cols).toPandas()
-        bc = frame.sparkSession.sparkContext.broadcast(
-            np.ascontiguousarray(ref_pdf.to_numpy(dtype=np.float64))
-        )
-        # fresh StructType: .add() on DataFrame.schema would mutate the
-        # frame's CACHED StructType in place
-        schema = (
-            StructType(list(frame.schema.fields) + [StructField(col, LongType())])
-            if first
-            else frame.schema
-        )
-
-        def count_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            sky = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                counts = _count_dominators_vs(pdf[cols].to_numpy(dtype=np.float64), sky)
-                if not first:
-                    counts += pdf[col].to_numpy()
-                keep = counts < k
-                if keep.any():
-                    out = pdf.loc[keep].copy()
-                    out[col] = counts[keep]
-                    yield out
-
-        return frame.mapInPandas(count_pass, schema=schema)
-
-    def chunked(self, frame, n):
         if n > _TREE_FANOUT * _VERIFY_MAX_ROWS:
             raise ValueError(
                 f"skyband: candidate union has {n} rows "
                 f"(> {_TREE_FANOUT * _VERIFY_MAX_ROWS}); raise k selectivity "
                 "or partition count"
             )
-        return super().chunked(frame, n)
+        cols, k, col = self.prep_cols, self.k, self.col
+        sc = frame.sparkSession.sparkContext
+        # counts need no order: any partition of the candidates adds up
+        arr = _dim_matrix(frame.select(*cols).toArrow(), cols)
+        bcs = [sc.broadcast(s) for s, in _stride_slices(arr)]
+        # fresh StructType: .add() on DataFrame.schema would mutate the
+        # frame's CACHED StructType in place
+        schema = StructType(list(frame.schema.fields) + [StructField(col, LongType())])
+
+        def count_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            refs = [b.value for b in bcs]
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                pts = pdf[cols].to_numpy(dtype=np.float64)
+                rows = np.arange(len(pdf))
+                counts = np.zeros(len(pdf), dtype=np.int64)
+                for sky in refs:
+                    counts[rows] += _count_dominators_vs(pts[rows], sky)
+                    rows = rows[counts[rows] < k]
+                    if not rows.size:
+                        break
+                if rows.size:
+                    out = pdf.iloc[rows].copy()
+                    out[col] = counts[rows]
+                    yield out
+
+        return frame.mapInPandas(count_pass, schema=schema)
 
 
 def skyline(
@@ -808,33 +782,6 @@ def _skyline_merge(local_df: DataFrame, prep_cols: list[str]):
         cur = _persist(cur.repartition(_TREE_FANOUT).mapInPandas(local, schema=cur.schema))
         n = cur.count()
     return _verify(cur, n, _SkylineFilter(prep_cols))
-
-
-def _uniform_chunk_col(n_chunks: int) -> Column:
-    """Uniform chunk id for the distributed-merge passes: consecutive
-    ``monotonically_increasing_id`` values within each task cycle
-    round-robin through the chunks, so every chunk holds at most
-    ``ceil(rows_in_task / n_chunks)`` rows per task — bounded by
-    construction even on an all-duplicates corpus, where a dim-hash key
-    would co-locate every row into one chunk (r10 verdict).
-
-    The id is NOT stable across recomputation (it encodes task index +
-    row position), and no deterministic function of the row VALUES can
-    replace it without reintroducing the skew: duplicates are
-    indistinguishable by value, so a value-derived key necessarily
-    co-locates an all-duplicates corpus (a value-hash-bucketed
-    ``row_number`` window splits them, but its window partition IS the
-    duplicate group — single-task at exactly the adversarial input).
-    Callers therefore MUST pin the frame carrying this column with an
-    eager ``localCheckpoint`` (not a plain ``persist``) before reading
-    it more than once: a checkpoint freezes the materialized assignment,
-    so a lost/evicted block FAILS the job (fail-stop) instead of
-    silently recomputing a different assignment that could overlap or
-    miss rows across chunks (r11 ADVICE).  On a multi-node deployment
-    where executor loss must be survivable, substitute a reliable
-    ``checkpoint()`` (HDFS-backed) in :meth:`_Verify.chunked` — the
-    lifetime contract is identical."""
-    return F.pmod(F.monotonically_increasing_id(), F.lit(n_chunks))
 
 
 def skyline_verify_count(df: DataFrame, dims: Sequence, result: DataFrame) -> int:
@@ -947,13 +894,13 @@ def skyband(
       for true members; for false survivors the same count certifies
       exclusion (B3: at least k of their dominators are in the union).
 
-    The verify takes the family's one driver / broadcast / chunked
-    dispatch (:func:`_verify`).  Unlike the skyline there is no
-    tree-merge round (dominator COUNTS don't tree-merge), but counts ARE
-    additive over a partition of the candidate union, so volumes past
-    the broadcast bound take the chunked counting chain; only a union
-    past ``32 x _VERIFY_MAX_ROWS`` (where the stacked chunk broadcasts
-    would stop being a rounding error) raises."""
+    The verify takes the family's one driver / distributed dispatch
+    (:func:`_verify`).  Unlike the skyline there is no tree-merge round
+    (dominator COUNTS don't tree-merge), but counts ARE additive over a
+    partition of the candidate union, so a union past the broadcast
+    bound ships as several slices whose counts add up within the one
+    counting pass; only a union past ``32 x _VERIFY_MAX_ROWS`` (where
+    the slice broadcasts would stop being a rounding error) raises."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     from .skyline_kernel import skyband_mask
@@ -1861,7 +1808,7 @@ class _LabelSkylines(_Verify):
             keep[rows] = skyline_mask(arr[rows])
         return keep, None
 
-    def broadcast(self, frame):
+    def distributed(self, frame, n):
         lc = self.label_col
         big = [lbl for lbl, n in self.counts.items() if n > _VERIFY_MAX_ROWS]
         small = frame.where(~F.col(lc).isin(big)) if big else frame
@@ -1873,9 +1820,6 @@ class _LabelSkylines(_Verify):
                 _merge_survivors(frame.where(F.col(lc) == lbl), self.prep_cols)
             )
         return out
-
-    def chunked(self, frame, n):
-        return self.broadcast(frame)
 
 
 def _scatter_obj_counts(

@@ -225,10 +225,39 @@ def _intra_dominated(A: np.ndarray, As: np.ndarray, exact: bool) -> np.ndarray:
     return dom.any(axis=0)
 
 
+def frontier_2d(d0: np.ndarray, d1: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Exact 2-D frontier of (d0, d1) pairs, both minimized, as distinct
+    pairs in ascending d0: per distinct d0 keep the min d1, then keep the
+    pairs whose strict-predecessor running min (in d0 order) exceeds
+    their d1.  O(n log n); pure comparisons and mins — no arithmetic — so
+    it is float-exact and matches the relational ``groupBy(d0).min(d1)``
+    + strict-prefix-min plan bit for bit.  The frontier is a
+    skyline-merge monoid (``F(A ∪ B) = F(F(A) ∪ F(B))``), which is what
+    makes the per-partition partial + driver merge of the 2-D skyline
+    exact.  NaN-free input."""
+    n = d0.shape[0]
+    if n == 0:
+        return d0, d1
+    order = np.lexsort((d1, d0))  # by d0, ties by d1: first-per-d0 = min d1
+    d0s, d1s = d0[order], d1[order]
+    first = np.empty(n, dtype=bool)
+    first[0] = True
+    np.not_equal(d0s[1:], d0s[:-1], out=first[1:])
+    d0u, d1u = d0s[first], d1s[first]
+    pm = np.minimum.accumulate(d1u)
+    keep = np.empty(d0u.shape[0], dtype=bool)
+    keep[0] = True
+    np.greater(pm[:-1], d1u[1:], out=keep[1:])
+    return d0u[keep], d1u[keep]
+
+
 def skyline_mask(points: np.ndarray) -> np.ndarray:
     """Return a boolean mask selecting the skyline rows of ``points``.
 
     ``points``: (n, d) float array, all dims minimized.  NaN rows -> False.
+    d == 2 takes the O(n log n) frontier rule (:func:`frontier_2d`): a
+    row survives iff its pair is a frontier pair, so every copy of a
+    surviving pair survives.
     """
     pts = np.asarray(points, dtype=np.float64)
     if pts.ndim != 2:
@@ -242,6 +271,11 @@ def skyline_mask(points: np.ndarray) -> np.ndarray:
         return keep
     vidx = np.flatnonzero(valid)
     vp = pts[vidx]
+    if d == 2:
+        f0, f1 = frontier_2d(vp[:, 0], vp[:, 1])
+        i = np.minimum(np.searchsorted(f0, vp[:, 0]), f0.shape[0] - 1)
+        keep[vidx] = (f0[i] == vp[:, 0]) & (f1[i] == vp[:, 1])
+        return keep
     sums = vp.sum(axis=1)
     exact = sums_exact(vp)
     if exact:

@@ -26,11 +26,6 @@ Spark translation:
   groupBy over the emitted partials (a micro-batch boundary is a natural
   barrier, so no arrival-countdown state is needed in ``availableNow``
   replays; for continuous mode, run it inside ``foreachBatch``).
-
-Production note: at cluster scale the per-key state should move to
-``transformWithStateInPandas`` value-state handles (Spark 4.x) to avoid
-re-serializing the whole skyline tuple each batch; the operator body is
-identical.
 """
 
 from __future__ import annotations
@@ -59,8 +54,8 @@ STATE_SCHEMA = (
 
 
 def _apply_batch(pid: int, state_tuple, pdfs: Iterator[pd.DataFrame], d: int | None = None):
-    """Shared operator body for both state backends: union-tagged CoProcess
-    — data rows have ``values``; trigger rows have ``query_id``.  Batch
+    """The stateful operator body: union-tagged CoProcess — data rows
+    have ``values``; trigger rows have ``query_id``.  Batch
     order: ingest data, then evaluate triggers — snapshot-at-batch
     semantics (SURVEY.md §3.3).  Returns (new_state_tuple, out_frames)."""
     if state_tuple is not None:
@@ -174,7 +169,7 @@ def _apply_batch(pid: int, state_tuple, pdfs: Iterator[pd.DataFrame], d: int | N
 
 
 def _make_stateful_update(d: int | None = None):
-    """applyInPandasWithState backend (Spark >= 3.4)."""
+    """The ``applyInPandasWithState`` update function (Spark >= 3.4)."""
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
         new_state, out_frames = _apply_batch(

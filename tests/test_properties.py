@@ -193,10 +193,11 @@ def test_kdominant_kernel_properties(rows, k):
 @settings(max_examples=50, deadline=None)
 @given(points_strategy, st.integers(min_value=1, max_value=6))
 def test_chunked_dominated_filter_equals_single_pass(rows, n_chunks):
-    """The fact the chunked skyline verify (operators/skyline.py,
-    _Verify.chunked with the skyline filter) relies on: progressively filtering candidates against an arbitrary partition
-    of the reference set (logical AND across chunks) equals one pass
-    against the whole reference — strict dominance is a set property."""
+    """The fact the multi-slice skyline verify (operators/skyline.py,
+    _broadcast_verify over _stride_slices) relies on: progressively
+    filtering candidates against an arbitrary partition of the reference
+    set (logical AND across slices) equals one pass against the whole
+    reference — strict dominance is a set property."""
     from query_skyline_qos_flink_spark.operators.skyline_kernel import (
         dominated_mask_vs_sorted,
     )
@@ -224,9 +225,9 @@ def test_chunked_dominated_filter_equals_single_pass(rows, n_chunks):
 @settings(max_examples=50, deadline=None)
 @given(points_strategy, st.integers(min_value=1, max_value=6))
 def test_dominator_counts_additive_over_reference_partition(rows, n_chunks):
-    """The fact the chunked skyband verify (_Verify.chunked with the
-    dominator-count kernel) relies on: dominator counts sum
-    exactly across any partition of the reference set."""
+    """The fact the multi-slice skyband verify (_DominatorCount.distributed
+    over _stride_slices) relies on: dominator counts sum exactly across
+    any partition of the reference set."""
     from query_skyline_qos_flink_spark.operators.skyline_kernel import (
         _count_dominators_vs,
     )
@@ -238,3 +239,38 @@ def test_dominator_counts_additive_over_reference_partition(rows, n_chunks):
     for c in range(n_chunks):
         partial += _count_dominators_vs(pts, pts[assign == c])
     assert (partial == whole).all()
+
+
+# 2-D points with heavy ties, duplicates, signed zeros, infinities and NaN
+coords_2d = st.one_of(
+    st.integers(min_value=0, max_value=12).map(float),
+    st.sampled_from([0.0, -0.0, np.inf, -np.inf, np.nan]),
+    st.floats(min_value=-100, max_value=100, allow_nan=False, width=32),
+)
+points_2d_strategy = st.lists(st.tuples(coords_2d, coords_2d), min_size=1, max_size=400)
+
+
+@settings(max_examples=100, deadline=None)
+@given(points_2d_strategy)
+def test_kernel_2d_equals_bruteforce(rows):
+    """skyline_mask's O(n log n) d == 2 branch (the frontier rule) keeps
+    exactly the rows the brute-force definition keeps, every duplicate
+    copy of a survivor included."""
+    pts = np.asarray(rows, dtype=np.float64)
+    assert (skyline_mask(pts) == skyline_mask_brute(pts)).all()
+
+
+@settings(max_examples=100, deadline=None)
+@given(points_2d_strategy)
+def test_frontier_2d_is_distinct_skyline_pairs(rows):
+    """frontier_2d returns each distinct surviving pair once, in
+    ascending d0 — the shape the 2-D partial merge relies on."""
+    from query_skyline_qos_flink_spark.operators.skyline_kernel import frontier_2d
+
+    pts = np.asarray(rows, dtype=np.float64)
+    valid = pts[~np.isnan(pts).any(axis=1)]
+    f0, f1 = frontier_2d(valid[:, 0], valid[:, 1])
+    assert (np.diff(f0) > 0).all()
+    want = {tuple(r) for r in pts[skyline_mask_brute(pts)]}
+    assert set(zip(f0.tolist(), f1.tolist())) == want
+

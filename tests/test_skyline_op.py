@@ -220,6 +220,36 @@ def test_partition_stats_all_strategies_match_single_calls(spark):
     assert {r[0] for r in got} == set(strategies)
 
 
+def test_optimality_folds_ratios_in_pid_order(spark):
+    """Optimality depends only on the integer stats: two stats frames
+    holding the same rows in different orders give bit-identical values,
+    equal to the left-to-right fold of survivors/local_size in pid
+    order."""
+    from query_skyline_qos_flink_spark.operators.metrics import optimality
+
+    rng = np.random.default_rng(0)
+    P = 16
+    loc = rng.integers(1, 5000, P)
+    surv = np.minimum(loc, rng.integers(0, 3000, P))
+    rows = [(p, int(lo), int(s)) for p, lo, s in zip(range(P), loc, surv)]
+
+    def fold(rs):
+        acc = 0.0
+        for _, lo, s in rs:
+            acc += s / lo
+        return acc / P
+
+    # the row order matters to a naive fold on this data
+    assert fold(rows) != fold(rows[::-1])
+    schema = "pid int, local_size bigint, survivors bigint"
+    got = [
+        optimality(spark.createDataFrame(rs, schema).repartition(parts), P).first()
+        for rs, parts in ((rows, 1), (rows[::-1], 1), (rows[5:] + rows[:5], 3))
+    ]
+    assert {g["optimality"] for g in got} == {fold(rows)}
+    assert {g["skyline_size"] for g in got} == {int(surv.sum())}
+
+
 def test_2d_two_pass_prefix_min_many_range_partitions(spark, monkeypatch):
     """The ungrouped 2-D FALLBACK path (frontier-pair volume past the
     driver-merge gate) must bucket the distinct d0 values into many ranges
@@ -855,11 +885,19 @@ def test_prob_skyline_includes_objects_rounding_up_to_threshold(spark):
     assert out.get(1) == 0.666667, out
 
 
+def _verify_passes_above_cache(df) -> int:
+    """MapInPandas nodes between ``df``'s root and its topmost cached
+    relation (the persisted phase-1 candidates): the verify passes."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" in plan, plan
+    return plan.split("InMemoryRelation")[0].count("MapInPandas")
+
+
 def test_chunked_broadcast_verify_matches_bounded_path(spark):
-    """Survivor volumes past _VERIFY_MAX_ROWS take the chunked distributed
-    merge (hash-chunk the candidates, one broadcast-verify pass per
-    chunk) instead of a single-task merge: forcing a tiny bound must
-    reproduce the bounded path's skyline EXACTLY, row for row."""
+    """Survivor volumes past _VERIFY_MAX_ROWS take the distributed verify
+    with several broadcast slices (one pass meets every slice) instead
+    of a single-task merge: forcing a tiny bound must reproduce the
+    bounded path's skyline EXACTLY, row for row, in ONE verify pass."""
     from query_skyline_qos_flink_spark.operators import skyline as sky
     from query_skyline_qos_flink_spark.sources.generators import points
 
@@ -867,40 +905,61 @@ def test_chunked_broadcast_verify_matches_bounded_path(spark):
     full = sorted(tuple(r) for r in sky.skyline(df, ["v0", "v1", "v2"]).collect())
     old = sky._VERIFY_MAX_ROWS
     try:
-        sky._VERIFY_MAX_ROWS = 500  # survivors >> 500 -> chunked path
-        chunked = sorted(
-            tuple(r) for r in sky.skyline(df, ["v0", "v1", "v2"]).collect()
-        )
+        sky._VERIFY_MAX_ROWS = 500  # survivors >> 500 -> many slices
+        res = sky.skyline(df, ["v0", "v1", "v2"])
+        chunked = sorted(tuple(r) for r in res.collect())
     finally:
         sky._VERIFY_MAX_ROWS = old
     assert len(full) > 500  # the forced bound actually engaged the path
     assert chunked == full
+    assert _verify_passes_above_cache(res) == 1
 
 
-def test_chunked_verify_retains_duplicates_and_survives_empty_chunks(spark):
-    """An all-duplicates corpus through the forced chunked path: the
+def test_chunked_verify_retains_duplicates_and_survives_empty_chunks(spark, monkeypatch):
+    """An all-duplicates corpus through the forced multi-slice path: the
     strict test must keep every tie (duplicate-retention policy) whatever
-    chunk each copy lands in, and reference chunks that happen to be
-    empty must be a no-op, not a crash."""
+    slice each copy lands in.  Slices are cut by position, not by a dim
+    hash (r10 verdict: a dim hash collapsed this corpus into ONE
+    oversized chunk), so every slice holds at most _VERIFY_MAX_ROWS rows
+    and together they partition the candidates.  An empty reference is
+    a no-op, not a crash."""
     from query_skyline_qos_flink_spark.operators import skyline as sky
 
     dup = spark.createDataFrame(
         [(i, 1.0, 2.0) for i in range(2000)], "id long, a double, b double"
     )
-    old = sky._VERIFY_MAX_ROWS
-    try:
-        sky._VERIFY_MAX_ROWS = 100
-        out = sky._merge_survivors(dup, ["a", "b"])
-        assert out.count() == 2000
-    finally:
-        sky._VERIFY_MAX_ROWS = old
+    cut, real = [], sky._stride_slices
+
+    def spy(arr, ssum):
+        out = real(arr, ssum)
+        cut.append((arr, out))
+        return out
+
+    monkeypatch.setattr(sky, "_stride_slices", spy)
+    monkeypatch.setattr(sky, "_VERIFY_MAX_ROWS", 100)
+    out = sky._merge_survivors(dup, ["a", "b"])
+    assert out.count() == 2000
+    (arr, slices), = cut
+    assert arr.shape == (2000, 2)
+    assert len(slices) == 20
+    assert all(len(s) <= 100 and len(ss) == len(s) for s, ss in slices)
+    assert sum(len(s) for s, _ in slices) == 2000
+    assert (np.concatenate([s for s, _ in slices]) == arr).all()
+    # on distinct rows the slices are a partition: every row exactly once
+    pts = np.arange(4000, dtype=np.float64).reshape(2000, 2)
+    parts = real(pts, pts.sum(axis=1))
+    rows = [tuple(r) for s, _ in parts for r in s]
+    assert len(rows) == 2000 and set(rows) == {tuple(r) for r in pts}
+
+    empty = dup.limit(0)
+    assert sky._broadcast_verify(dup, ["a", "b"], ref=empty).count() == 2000
 
 
 def test_chunked_skyband_all_duplicates_splits_buckets(spark):
-    """The all-duplicates corpus through the forced chunked counting
-    path: uniform row-key chunks stay bounded by construction and the
-    chained counting passes must be exact (duplicates never dominate,
-    so every row survives with count 0)."""
+    """The all-duplicates corpus through the forced multi-slice counting
+    path: stride slices stay bounded by construction and the one
+    counting pass must be exact (duplicates never dominate, so every row
+    survives with count 0)."""
     from query_skyline_qos_flink_spark.operators import skyline as sky
 
     dup = spark.createDataFrame(
@@ -908,33 +967,11 @@ def test_chunked_skyband_all_duplicates_splits_buckets(spark):
     )
     old = sky._VERIFY_MAX_ROWS
     try:
-        sky._VERIFY_MAX_ROWS = 200  # union 3000 -> 15 sub-chunks of one bucket
+        sky._VERIFY_MAX_ROWS = 200  # union 3000 -> 15 slices of one value
         out = sky.skyband(dup, ["a", "b"], k=2)
         assert out.count() == 3000
     finally:
         sky._VERIFY_MAX_ROWS = old
-
-
-def test_uniform_chunks_bounded_on_all_duplicates(spark):
-    """The chunked merges key chunks on a uniform row id, not a dim hash
-    (r10 verdict): on an all-duplicates corpus — the dim-hash worst case,
-    which collapsed into ONE oversized chunk — every chunk must stay near
-    n / n_chunks (round-robin within each task bounds it by construction
-    at ceil(task_rows / n_chunks) summed over tasks)."""
-    from query_skyline_qos_flink_spark.operators import skyline as sky
-
-    dup = spark.createDataFrame(
-        [(1.0, 2.0)] * 5000, "a double, b double"
-    ).repartition(8)
-    counts = [
-        r["cnt"]
-        for r in dup.withColumn("c", sky._uniform_chunk_col(10))
-        .groupBy("c")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    ]
-    assert len(counts) == 10  # no collapse, no empty chunks
-    assert max(counts) <= 5000 // 10 + 8  # n/n_chunks + one per task
 
 
 def test_broadcast_verify_fast_paths_requalify_per_batch(spark):
@@ -964,11 +1001,12 @@ def test_broadcast_verify_fast_paths_requalify_per_batch(spark):
 
 
 def test_chunked_skyband_counts_match_bounded_path(spark):
-    """Candidate unions past _VERIFY_MAX_ROWS take the chunked counting
-    pipeline (dominator counts are additive over a partition of the
-    union; rows early-drop at running count >= k).  A forced tiny bound
-    must reproduce the bounded path's band AND exact dominator counts
-    row for row; a union past _TREE_FANOUT x bound still raises."""
+    """Candidate unions past _VERIFY_MAX_ROWS ship as several broadcast
+    slices met in one counting pass (dominator counts are additive over
+    a partition of the union; rows early-drop at running count >= k).
+    A forced tiny bound must reproduce the bounded path's band AND exact
+    dominator counts row for row, in ONE verify pass; a union past
+    _TREE_FANOUT x bound still raises."""
     import pytest
 
     from query_skyline_qos_flink_spark.operators import skyline as sky
@@ -978,14 +1016,14 @@ def test_chunked_skyband_counts_match_bounded_path(spark):
     full = sorted(tuple(r) for r in sky.skyband(df, ["v0", "v1", "v2"], k=3).collect())
     old = sky._VERIFY_MAX_ROWS
     try:
-        sky._VERIFY_MAX_ROWS = 1000  # union ~24.7k -> 25 chunks
-        chunked = sorted(
-            tuple(r) for r in sky.skyband(df, ["v0", "v1", "v2"], k=3).collect()
-        )
+        sky._VERIFY_MAX_ROWS = 1000  # union ~24.7k -> 25 slices
+        res = sky.skyband(df, ["v0", "v1", "v2"], k=3)
+        chunked = sorted(tuple(r) for r in res.collect())
     finally:
         sky._VERIFY_MAX_ROWS = old
     assert len(full) > 1000  # the forced bound actually engaged the path
     assert chunked == full  # membership AND counts identical
+    assert _verify_passes_above_cache(res) == 1
 
     try:
         sky._VERIFY_MAX_ROWS = 10  # fanout cap: 32 x 10 << union
@@ -1037,24 +1075,27 @@ def test_skyline_layers_single_pass_matches_peel_fallback(spark):
 # that corpus: skyline phase-1 union 82 rows (8 survivors), skyband k=3
 # union 241 (34 members), skycube full-space skyline 8 rows with one
 # subspace label past 300 local survivors.
-_CHUNKED = "_uniform_chunk_col"
+_SLICES = "_stride_slices"
 _GATE_PATHS = {
-    # driver off -> broadcast verify; tiny bound -> tree merge + chunked
-    "skyline": {"broadcast": (0, None, None), "chunked": (0, 20, _CHUNKED)},
-    # chunked counting: 241 > 60 and within the 32 x bound raise limit
-    "skyband": {"broadcast": (0, None, None), "chunked": (0, 60, _CHUNKED)},
-    # the band comes from the same verify; chunked = oversized-band branch
+    # driver off -> one-slice distributed verify; tiny bound -> tree
+    # merge + several slices
+    "skyline": {"broadcast": (0, None, None), "chunked": (0, 20, _SLICES)},
+    # several slices: 241 > 60 and within the 32 x bound raise limit
+    "skyband": {"broadcast": (0, None, None), "chunked": (0, 60, _SLICES)},
+    # the band comes from the same verify
     "top_dominating": {
         "broadcast": (0, None, None),
-        "chunked": (0, 60, _CHUNKED),
+        "chunked": (0, 60, _SLICES),
     },
-    # broadcast: full-space broadcast merge + grouped per-label merge;
-    # labels: a label past the bound takes the per-label skyline merge;
+    # broadcast: full-space distributed merge + grouped per-label merge;
+    # labels: a label past the bound takes the per-label skyline merge
+    # (only that branch of _LabelSkylines.distributed calls
+    # _merge_survivors; the full-space merge calls _skyline_merge);
     # chunked: full-space skyline past the bound -> per-subspace loop
     "skycube": {
         "broadcast": (0, None, None),
-        "labels": (0, 100, _CHUNKED),
-        "chunked": (0, 4, _CHUNKED),
+        "labels": (0, 100, "_merge_survivors"),
+        "chunked": (0, 4, _SLICES),
     },
     # candidate set past the bound -> per-layer peel loop (each layer's
     # skyline has at most 113 phase-1 rows, so its merge stays on the
@@ -1067,11 +1108,11 @@ _GATE_PATHS = {
 def test_driver_verify_gate_parity(spark, monkeypatch, op):
     """Every global-merge path of the skyline family returns the rows of
     the default (driver-side) path: candidate sets at or below
-    _DRIVER_VERIFY_MAX_ROWS finish on the driver, larger ones broadcast
-    the candidates to every task, and sets past _VERIFY_MAX_ROWS verify
-    chunk by chunk (or take the operator's oversized fallback).  Forced
-    by shrinking the gates; covers duplicates, ties, max dims and the
-    NaN policy."""
+    _DRIVER_VERIFY_MAX_ROWS finish on the driver, larger ones take the
+    distributed verify, whose candidates ship as one broadcast slice per
+    _VERIFY_MAX_ROWS rows (or the operator's oversized fallback runs).
+    Forced by shrinking the gates; covers duplicates, ties, max dims and
+    the NaN policy."""
     from query_skyline_qos_flink_spark.operators import skyline as sky
 
     rng = np.random.default_rng(77)
@@ -1112,14 +1153,18 @@ def test_driver_verify_gate_parity(spark, monkeypatch, op):
             if engaged is not None:
 
                 def spy(*a, real=getattr(sky, engaged), **kw):
-                    calls.append(1)
-                    return real(*a, **kw)
+                    out = real(*a, **kw)
+                    calls.append(out)
+                    return out
 
                 m.setattr(sky, engaged, spy)
             forced = sorted(tuple(r) for r in run().collect())
         assert forced == default, (op, path)
         # the forced gates actually engaged the path
         assert engaged is None or calls, (op, path)
+        if path == "chunked":
+            # ... and cut the candidates into more than one slice
+            assert max(len(s) for s in calls) > 1, (op, path)
 
 
 def test_whole_input_driver_path_parity(spark, monkeypatch):
