@@ -43,6 +43,15 @@ join: by shape.
   top-dominating) with a dominator-count kernel, and the skycube's
   full-space and per-subspace merges.
 
+* **Non-transitive members — one refutation path.**  The reverse and
+  k-dominant skylines have no local-superset merge fact, so both run
+  :func:`_refute_candidates`: local thinning against a running pool of
+  strong refuters riding the scan, then an exact broadcast counting
+  pass where a candidate survives iff its refuter count equals its self
+  count.  They differ only in the :class:`_Refutation` rule (what
+  refutes a row, how refuters rank for the pool, how often a row
+  refutes itself).
+
 At 100 TB: phase 1 parallelism = input splits; shuffle volume is
 ``O(sum of local skyline sizes)``, not ``O(input)``; every broadcast is
 dims only (d doubles/row) and at most ``_VERIFY_MAX_ROWS`` rows per
@@ -70,6 +79,8 @@ from .joins import null_safe_semi_join
 from .layout import range_bucket
 from .skyline_kernel import (
     _count_dominators_vs,
+    count_kdominators_vs,
+    count_refuters_vs,
     dominance_planes,
     dominated_mask_vs_sorted,
     exact_f32,
@@ -120,6 +131,11 @@ _DRIVER_INPUT_MAX_ROWS = 65_536
 # s27's bench shape (20k rows x 4096 pool x 3 dims = 2.5e8, measured
 # ~0.3 s) while blocking the 65k^2-row pathological class (1.3e10).
 _DRIVER_KERNEL_MAX_OPS = 400_000_000
+# Buffer-and-compact cadence of the local thinning passes that carry more
+# than a skyline across Arrow batches (the k-skyband, the reverse and
+# k-dominant refutation pools): buffered rows are thinned once per this
+# many rows instead of once per ~10k-row batch.
+_COMPACT_ROWS = 250_000
 
 
 def _collect_small_input(prepped: DataFrame, cols: Sequence[str]):
@@ -233,13 +249,14 @@ def _prep(df: DataFrame, dims: Sequence) -> tuple[DataFrame, list[str]]:
     return df.selectExpr(*exprs).where(" AND ".join(conds)), prep_cols
 
 
-def _local_skyline_iter(prep_cols: list[str]):
+def _local_skyline_iter(prep_cols: list[str], mask_fn=skyline_mask):
     """mapInPandas function: incremental per-partition skyline.
 
     Keeps only the partition's current skyline in memory (the reference
     buffers 5,000 rows then runs BNL, ``FlinkSkyline.java:232,286-289``;
     Arrow batches play that role here, with the running skyline carried
-    across batches)."""
+    across batches).  ``mask_fn(pts) -> keep`` is the local rule; the
+    skyline layers pass their first-K onion peel instead."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cur: pd.DataFrame | None = None
@@ -247,8 +264,7 @@ def _local_skyline_iter(prep_cols: list[str]):
             if pdf.empty:
                 continue
             allrows = pdf if cur is None else pd.concat([cur, pdf], ignore_index=True)
-            pts = allrows[prep_cols].to_numpy(dtype=np.float64)
-            mask = skyline_mask(pts)
+            mask = mask_fn(allrows[prep_cols].to_numpy(dtype=np.float64))
             cur = allrows if mask.all() else allrows.loc[mask]
         if cur is not None and not cur.empty:
             yield cur
@@ -831,15 +847,17 @@ def skyline_with_pid(
     return final.select(*out_cols)
 
 
-def _skyband_local_fn(prep_cols: list[str], k: int, compact_rows: int = 250_000):
+def _skyband_local_fn(prep_cols: list[str], k: int):
     """Per-partition local k-skyband thinning (a certified SUPERSET of the
     global band, kernel fact B2).  Buffer-and-compact rather than
     filter-per-Arrow-batch: the running band can be tens of thousands of
     rows (unlike a skyline), so re-running the forward pass every ~10k-row
-    Arrow batch repays O(|band|) per batch; compacting every ~250k
-    buffered rows runs the pass ~25x less often for the same bounded
-    memory.  Phase 1 of :func:`_skyband_members`."""
+    Arrow batch repays O(|band|) per batch; compacting every
+    ``_COMPACT_ROWS`` buffered rows runs the pass ~25x less often for the
+    same bounded memory.  Phase 1 of :func:`_skyband_members`."""
     from .skyline_kernel import skyband_mask
+
+    compact_rows = _COMPACT_ROWS
 
     def local_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         buf: list[pd.DataFrame] = []
@@ -1050,46 +1068,6 @@ def top_dominating(
     )
 
 
-def _collect_verified_candidates(prepped, local_fn, prep_cols, op_name):
-    """Shared filter-then-verify phase-1 assembly: run the local thinning
-    ``mapInPandas``, collect the candidates as an Arrow table + dim
-    matrix, and apply the ``_VERIFY_MAX_ROWS`` guard.  Returns
-    ``(phase1, cand_tbl, cand_arr)``; ``cand_tbl`` is ``None`` when there
-    are no candidates.
-
-    The guard is applied POST-collect for thin frames (round 16): these
-    operators RAISE past the bound — there is no graceful fallback to
-    protect — so the separate persist + count() job bought only a politer
-    error while charging every successful call a driver round trip.  For
-    frames WIDER than the prep columns (reverse/k-dominant pass the full
-    original row set through phase 1), a pre-collect count runs first
-    (round-16 ADVICE: an oversized wide candidate set would otherwise be
-    pulled up to ``spark.driver.maxResultSize`` before raising — a driver
-    memory spike for a failure path).  The count reads the just-persisted
-    phase 1, so the thinning pass itself is never paid twice.  The
-    persist stays either way: a session re-running the same call
-    plan-twins into the cached phase 1."""
-    phase1 = _persist(_fanout(prepped).mapInPandas(local_fn, schema=prepped.schema))
-    wide = len(phase1.columns) > len(prep_cols) + 2
-    if wide:
-        n_cand = phase1.count()
-        if n_cand > _VERIFY_MAX_ROWS:
-            raise ValueError(
-                f"{op_name}: candidate set has {n_cand} rows "
-                f"(> {_VERIFY_MAX_ROWS}); raise pool_size or partition count"
-            )
-    cand_tbl = phase1.toArrow()
-    n_cand = cand_tbl.num_rows
-    if n_cand == 0:
-        return phase1, None, None
-    if n_cand > _VERIFY_MAX_ROWS:
-        raise ValueError(
-            f"{op_name}: candidate set has {n_cand} rows "
-            f"(> {_VERIFY_MAX_ROWS}); raise pool_size or partition count"
-        )
-    return phase1, cand_tbl, _dim_matrix(cand_tbl, prep_cols)
-
-
 def _broadcast_partial_counts(prepped, prep_cols, count_batch, m, total_col):
     """Shared filter-then-verify phase-2 counting pass: one ``mapInPandas``
     over the full input accumulating int64 partial counts per candidate
@@ -1124,12 +1102,184 @@ def _rank_sum(arr: np.ndarray) -> np.ndarray:
     return ranks
 
 
+class _Refutation:
+    """The one rule the family's two non-transitive members differ on —
+    what refutes a row — for :func:`_refute_candidates`.  A row is in the
+    answer iff its refuter count over the whole input equals
+    ``self_count``.  Three numpy methods, all over prepped-space dim
+    matrices:
+
+    * ``score(pts)`` ranks rows as pool refuters, strongest (lowest)
+      first;
+    * ``counts(cand, ref)`` gives each ``cand`` row's refuter count
+      among the ``ref`` rows;
+    * ``self_count(cand)`` says how often a row refutes itself (and so
+      is counted once when ``ref`` holds its own row)."""
+
+
+class _ReverseRefuters(_Refutation):
+    """Reverse skyline: r refutes p iff ``|r - p| <= |q - p|`` on every
+    dim, strictly on one (half-widths ``|q - p|`` come from ``cand``).
+    Near-q rows are the strongest refuters, ranked by the per-dim-rank
+    sum of ``|x - q|`` so no single large-magnitude dim drowns the
+    others.  A row refutes itself (and its exact duplicates) whenever it
+    is not AT q."""
+
+    def __init__(self, q: np.ndarray):
+        self.q = q
+
+    def score(self, pts: np.ndarray) -> np.ndarray:
+        return _rank_sum(np.abs(pts - self.q[None, :]))
+
+    def counts(self, cand: np.ndarray, ref: np.ndarray) -> np.ndarray:
+        return count_refuters_vs(cand, np.abs(self.q[None, :] - cand), ref)
+
+    def self_count(self, cand: np.ndarray) -> np.ndarray:
+        return (np.abs(self.q[None, :] - cand) > 0).any(axis=1).astype(np.int64)
+
+
+class _KDominators(_Refutation):
+    """k-dominant skyline: r refutes p iff r <= p on at least ``k`` dims,
+    strictly on one.  The lowest per-dim-rank-sum rows are the strongest
+    k-dominators (rank sum rather than raw sum, so s28's epoch-micros
+    ship date cannot decide the whole pool).  A row never k-dominates
+    itself or an exact duplicate (no strict dim)."""
+
+    def __init__(self, k: int):
+        self.k = k
+
+    def score(self, pts: np.ndarray) -> np.ndarray:
+        return _rank_sum(pts)
+
+    def counts(self, cand: np.ndarray, ref: np.ndarray) -> np.ndarray:
+        return count_kdominators_vs(cand, ref, self.k)
+
+    def self_count(self, cand: np.ndarray) -> np.ndarray:
+        return np.zeros(cand.shape[0], dtype=np.int64)
+
+
+def _pool_survivors(rule: _Refutation, pts, ids, pool_pts, pool_ids) -> np.ndarray:
+    """Mask of the ``pts`` rows (row ids ``ids``) that no row of the pool
+    refutes.  A row's own pool entry is not a refuter; ids are row
+    positions, not values, so exact duplicates still refute each other."""
+    refuters = rule.counts(pts, pool_pts)
+    selfs = rule.self_count(pts)
+    if selfs.any():
+        refuters -= selfs * np.isin(ids, pool_ids)
+    return refuters <= 0
+
+
+def _refutation_local_fn(prep_cols: list[str], rule: _Refutation, pool_size: int):
+    """Phase 1 of :func:`_refute_candidates`, riding the scan with bounded
+    state: each partition keeps a running pool of the ``pool_size``
+    lowest-``score`` rows seen so far (with partition-local row ids) and,
+    every ``_COMPACT_ROWS`` buffered rows (the skyband cadence), drops
+    the buffered rows the pool refutes.  Earlier compactions saw a
+    weaker pool, so their survivors meet the finished pool once more,
+    together with the last buffer.  State is O(pool + survivors), and the
+    output is a certified SUPERSET of the answer: dropping a row
+    requires exhibiting an actual refuter."""
+    compact_rows = _COMPACT_ROWS
+
+    def local_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pool_pts: np.ndarray | None = None
+        pool_ids: np.ndarray | None = None
+        next_id = 0
+        surv: list[tuple[pd.DataFrame, np.ndarray]] = []
+        buf: list[tuple[pd.DataFrame, np.ndarray]] = []
+        buf_n = 0
+
+        def update_pool(pts: np.ndarray, ids: np.ndarray) -> None:
+            nonlocal pool_pts, pool_ids
+            if pool_pts is not None:
+                pts = np.concatenate([pool_pts, pts])
+                ids = np.concatenate([pool_ids, ids])
+            if pts.shape[0] > pool_size:
+                keep = np.argpartition(rule.score(pts), pool_size)[:pool_size]
+                pts, ids = pts[keep], ids[keep]
+            pool_pts, pool_ids = np.ascontiguousarray(pts), ids
+
+        def thin(item: tuple[pd.DataFrame, np.ndarray]):
+            frame, ids = item
+            pts = frame[prep_cols].to_numpy(dtype=np.float64)
+            keep = _pool_survivors(rule, pts, ids, pool_pts, pool_ids)
+            return item if keep.all() else (frame.loc[keep], ids[keep])
+
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ids = np.arange(next_id, next_id + len(pdf), dtype=np.int64)
+            next_id += len(pdf)
+            update_pool(pdf[prep_cols].to_numpy(dtype=np.float64), ids)
+            buf.append((pdf, ids))
+            buf_n += len(pdf)
+            if buf_n >= compact_rows:
+                surv += map(thin, buf)
+                buf, buf_n = [], 0
+        frames = [frame for frame, _ in map(thin, surv + buf) if not frame.empty]
+        if frames:
+            yield pd.concat(frames, ignore_index=True)
+
+    return local_fn
+
+
+def _refute_candidates(prepped, prep_cols, rule: _Refutation, pool_size, op_name):
+    """The filter-then-verify global phase of the reverse and k-dominant
+    skylines, whose dominance is not transitive, so no local-superset
+    merge fact applies: pool thinning (:func:`_refutation_local_fn`),
+    then an EXACT counting verify — the candidate dim matrix broadcasts
+    to one counting pass over the full input
+    (:func:`_broadcast_partial_counts`), and a candidate survives iff
+    its total refuter count equals its ``self_count``.  The self counts
+    ride the keyed candidate table, so one broadcast join assembles the
+    result.  Returns the surviving rows with ``prepped``'s columns.
+
+    The candidate count runs BEFORE the collect: phase 1 passes whole
+    rows through, so an oversized set past ``_VERIFY_MAX_ROWS`` raises
+    (naming ``op_name``) without first being pulled toward
+    ``spark.driver.maxResultSize``.  It reads the just-persisted phase 1,
+    so the thinning pass is not paid twice."""
+    import pyarrow as pa
+
+    phase1 = _persist(
+        _fanout(prepped).mapInPandas(
+            _refutation_local_fn(prep_cols, rule, pool_size), schema=prepped.schema
+        )
+    )
+    n_cand = phase1.count()
+    if n_cand > _VERIFY_MAX_ROWS:
+        raise ValueError(
+            f"{op_name}: candidate set has {n_cand} rows "
+            f"(> {_VERIFY_MAX_ROWS}); raise pool_size or partition count"
+        )
+    if n_cand == 0:
+        return phase1
+    spark = phase1.sparkSession
+    cand_tbl = phase1.toArrow()
+    cand_arr = _dim_matrix(cand_tbl, prep_cols)
+    bc = spark.sparkContext.broadcast(cand_arr)
+    totals = _broadcast_partial_counts(
+        prepped,
+        prep_cols,
+        lambda pts: rule.counts(bc.value, pts),
+        cand_arr.shape[0],
+        "__refuters",
+    )
+    # the SAME collected table feeds the broadcast matrix and the keyed
+    # frame, so __cand_idx alignment is positional by construction
+    selfs = pa.array(rule.self_count(cand_arr))
+    return (
+        _keyed_candidates(spark, cand_tbl.append_column("__self_c", selfs))
+        .join(F.broadcast(totals), "__cand_idx")
+        .where(F.col("__refuters") == F.col("__self_c"))
+    )
+
+
 def reverse_skyline(
     df: DataFrame,
     dims: Sequence,
     query_point: Sequence[float],
     pool_size: int = 4096,
-    compact_rows: int = 250_000,
 ) -> DataFrame:
     """Monochromatic reverse skyline of ``df`` w.r.t. ``query_point``
     (Dellis & Seeger, VLDB'07): the rows p such that NO other row r
@@ -1147,27 +1297,14 @@ def reverse_skyline(
     (r != p is row identity, not value identity); a row exactly AT q is
     always in the result.
 
-    Scale shape — no quadratic join:
-
-    1. local thinning (``mapInPandas`` riding the scan, bounded state):
-       each partition maintains a running pool of its ``pool_size``
-       nearest-to-q rows seen so far (near-q rows are the strongest
-       refuters) and, on the same ~250k-row buffer-and-compact cadence as
-       :func:`skyband`, drops buffered rows the pool refutes; a final
-       pass re-tests every accumulated survivor against the finished
-       pool.  State is O(pool + survivors), never the whole partition,
-       and the output is a certified SUPERSET of the answer — dropping a
-       row requires exhibiting an actual refuter;
-    2. broadcast-verify (EXACT): the surviving candidates' dim matrix +
-       per-candidate half-widths broadcast to one counting pass over the
-       full input (same partial-count shape as :func:`top_dominating`);
-       a candidate survives iff its global refuter count equals its own
-       self-contribution (its own row matches its box whenever w != 0).
-
-    Candidates are bounded by the same ``_VERIFY_MAX_ROWS`` guard as the
-    skyline merge."""
-    from .skyline_kernel import count_refuters_vs
-
+    Scale shape — no quadratic join: the family's one refutation path
+    (:func:`_refute_candidates`) with the :class:`_ReverseRefuters` rule —
+    local thinning against each partition's ``pool_size`` nearest-to-q
+    rows, then one exact broadcast refuter-counting pass where a
+    candidate survives iff its global count equals its own
+    self-contribution (its own row matches its box whenever it is not
+    at q).  A small input finishes on the driver with the same three
+    rule methods instead."""
     nd = _norm_dims(dims)
     if len(query_point) != len(nd):
         raise ValueError(
@@ -1176,86 +1313,15 @@ def reverse_skyline(
         )
     out_cols = df.columns
     prepped, prep_cols = _prep(df, dims)
-    q = np.array(
-        [
-            -float(v) if direction == "max" else float(v)
-            for v, (_c, direction) in zip(query_point, nd)
-        ],
-        dtype=np.float64,
-    )
-
-    def local_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # running nearest-to-q pool over ALL rows seen so far, with
-        # partition-local row ids so the pool test can subtract a row's
-        # own contribution without any coordinate-identity ambiguity
-        pool_pts: np.ndarray | None = None
-        pool_ids: np.ndarray | None = None
-        next_id = 0
-        surv_frames: list[pd.DataFrame] = []
-        surv_ids: list[np.ndarray] = []
-        buf: list[tuple[pd.DataFrame, np.ndarray]] = []
-        buf_n = 0
-
-        def update_pool(pts: np.ndarray, ids: np.ndarray) -> None:
-            nonlocal pool_pts, pool_ids
-            if pool_pts is None:
-                cat_p, cat_i = pts, ids
-            else:
-                cat_p = np.concatenate([pool_pts, pts])
-                cat_i = np.concatenate([pool_ids, ids])
-            if cat_p.shape[0] > pool_size:
-                # nearest-to-q by per-dim-rank sum of |x - q|: scale-
-                # invariant, so no single large-magnitude dim drowns the
-                # others when picking the strongest refuters
-                score = _rank_sum(np.abs(cat_p - q[None, :]))
-                keep = np.argpartition(score, pool_size)[:pool_size]
-                cat_p, cat_i = cat_p[keep], cat_i[keep]
-            pool_pts, pool_ids = np.ascontiguousarray(cat_p), cat_i
-
-        def thin(frame: pd.DataFrame, pts: np.ndarray, ids: np.ndarray):
-            w = np.abs(q[None, :] - pts)
-            counts = count_refuters_vs(pts, w, pool_pts)
-            self_c = (np.isin(ids, pool_ids) & (w > 0).any(axis=1)).astype(np.int64)
-            keep = (counts - self_c) <= 0
-            if keep.all():
-                return frame, ids
-            return frame.loc[keep], ids[keep]
-
-        def compact() -> None:
-            nonlocal buf, buf_n
-            for frame, ids in buf:
-                pts = frame[prep_cols].to_numpy(dtype=np.float64)
-                f2, i2 = thin(frame, pts, ids)
-                if len(f2):
-                    surv_frames.append(f2)
-                    surv_ids.append(i2)
-            buf, buf_n = [], 0
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = np.arange(next_id, next_id + len(pdf), dtype=np.int64)
-            next_id += len(pdf)
-            update_pool(pdf[prep_cols].to_numpy(dtype=np.float64), ids)
-            buf.append((pdf, ids))
-            buf_n += len(pdf)
-            if buf_n >= compact_rows:
-                compact()
-        compact()
-        if not surv_frames:
-            return
-        allrows = (
-            surv_frames[0]
-            if len(surv_frames) == 1
-            else pd.concat(surv_frames, ignore_index=True)
+    rule = _ReverseRefuters(
+        np.array(
+            [
+                -float(v) if direction == "max" else float(v)
+                for v, (_c, direction) in zip(query_point, nd)
+            ],
+            dtype=np.float64,
         )
-        allids = np.concatenate(surv_ids)
-        # earlier compactions tested against a weaker (smaller) pool;
-        # one cheap O(|survivors| x pool) re-test against the finished
-        # pool keeps the local output as thin as the one-shot form
-        out, _ = thin(allrows, allrows[prep_cols].to_numpy(dtype=np.float64), allids)
-        if not out.empty:
-            yield out
+    )
 
     # whole-input driver fast path (see _DRIVER_INPUT_MAX_BYTES): one
     # collect; a pool-thin-verify sequence runs once on the driver (ANY
@@ -1284,25 +1350,18 @@ def reverse_skyline(
             return df.sparkSession.createDataFrame(tbl).select(*out_cols)
         pool_n = min(pool_size, 256, n_rows)
         if n_rows * pool_n * d_dims <= _DRIVER_KERNEL_MAX_OPS:
-            ids = np.arange(n_rows, dtype=np.int64)
-            w_all = np.abs(q[None, :] - pts)
-            score = _rank_sum(w_all) if n_rows > pool_n else None
-            cand_idx = ids  # current certified candidate superset
+            score = rule.score(pts) if n_rows > pool_n else None
+            cand_idx = np.arange(n_rows, dtype=np.int64)  # certified superset
             verify_ok = False
             while True:
-                if score is None or pool_n >= n_rows:
-                    pool_pts, pool_ids = pts, ids
+                if pool_n >= n_rows:  # always so when score is None
+                    pool_idx = np.arange(n_rows, dtype=np.int64)
                 else:
-                    keep_pool = np.argpartition(score, pool_n)[:pool_n]
-                    pool_pts = np.ascontiguousarray(pts[keep_pool])
-                    pool_ids = ids[keep_pool]
-                thin_counts = count_refuters_vs(
-                    np.ascontiguousarray(pts[cand_idx]), w_all[cand_idx], pool_pts
+                    pool_idx = np.argpartition(score, pool_n)[:pool_n]
+                kept = _pool_survivors(
+                    rule, pts[cand_idx], cand_idx, pts[pool_idx], pool_idx
                 )
-                self_thin = (
-                    np.isin(cand_idx, pool_ids) & (w_all[cand_idx] > 0).any(axis=1)
-                ).astype(np.int64)
-                cand_idx = cand_idx[(thin_counts - self_thin) <= 0]
+                cand_idx = cand_idx[kept]
                 if cand_idx.shape[0] * n_rows * d_dims <= _DRIVER_KERNEL_MAX_OPS:
                     verify_ok = True
                     break
@@ -1313,47 +1372,14 @@ def reverse_skyline(
                     break  # even the re-thin would blow the budget: distribute
                 pool_n = next_pool
             if verify_ok:
-                cand = np.ascontiguousarray(pts[cand_idx])
-                w_cand = w_all[cand_idx]
-                totals = count_refuters_vs(cand, w_cand, pts)
-                self_c = (w_cand > 0).any(axis=1).astype(np.int64)
+                cand = pts[cand_idx]
                 final = np.zeros(n_rows, dtype=bool)
-                final[cand_idx[totals == self_c]] = True
+                final[cand_idx[rule.counts(cand, pts) == rule.self_count(cand)]] = True
                 out_tbl = tbl if final.all() else tbl.filter(pa.array(final))
                 return df.sparkSession.createDataFrame(out_tbl).select(*out_cols)
 
-    phase1, cand_tbl, cand_arr = _collect_verified_candidates(
-        prepped, local_fn, prep_cols, "reverse_skyline"
-    )
-    if cand_tbl is None:
-        return phase1.select(*out_cols)
-    spark = phase1.sparkSession
-    widths_arr = np.abs(q[None, :] - cand_arr)
-    bc = spark.sparkContext.broadcast((cand_arr, widths_arr))
-    totals = _broadcast_partial_counts(
-        prepped,
-        prep_cols,
-        lambda pts: count_refuters_vs(bc.value[0], bc.value[1], pts),
-        cand_arr.shape[0],
-        "__refuters",
-    )
-
-    # positional alignment + self-contribution column (1 iff the
-    # candidate's own row matches its box, i.e. any width nonzero)
-    cand_keyed = _keyed_candidates(spark, cand_tbl)
-    self_pdf = pd.DataFrame(
-        {
-            "__cand_idx": np.arange(cand_arr.shape[0]),
-            "__self_c": (widths_arr > 0).any(axis=1).astype(np.int64),
-        }
-    )
-    selfs = spark.createDataFrame(self_pdf, schema="__cand_idx long, __self_c long")
-    return (
-        cand_keyed.join(F.broadcast(totals), "__cand_idx")
-        .join(F.broadcast(selfs), "__cand_idx")
-        .where(F.col("__refuters") == F.col("__self_c"))
-        .select(*out_cols)
-    )
+    phase2 = _refute_candidates(prepped, prep_cols, rule, pool_size, "reverse_skyline")
+    return phase2.select(*out_cols)
 
 
 def kdominant_skyline(
@@ -1361,7 +1387,6 @@ def kdominant_skyline(
     dims: Sequence,
     k: int,
     pool_size: int = 4096,
-    compact_rows: int = 250_000,
 ) -> DataFrame:
     """k-dominant skyline (Chan et al., CIKM'06), the high-dimensional
     relaxation: r k-dominates p iff r <= p on at least ``k`` of the d
@@ -1372,23 +1397,12 @@ def kdominant_skyline(
 
     k-dominance is NOT transitive (cyclic k-dominance exists), so the
     skyline's local-superset merge facts don't apply; the shape is the
-    same filter-then-verify as :func:`reverse_skyline`:
-
-    1. local thinning (bounded state, riding the scan): each partition
-       keeps a running pool of its ``pool_size`` lowest rank-sum rows
-       seen so far (low-sum rows are the strongest k-dominators) on the
-       ~250k-row buffer-and-compact cadence, dropping buffered rows the
-       pool k-dominates — sound because any exhibited k-dominator
-       disqualifies globally, and a row never k-dominates itself or an
-       exact duplicate (no strict dim), so no identity bookkeeping;
-    2. broadcast-verify (EXACT): one counting pass of the full input
-       against the broadcast candidate matrix; survival = zero
-       k-dominators.
-
-    Candidates are bounded by the same ``_VERIFY_MAX_ROWS`` guard as the
-    skyline merge."""
-    from .skyline_kernel import count_kdominators_vs
-
+    reverse skyline's refutation path (:func:`_refute_candidates`) with
+    the :class:`_KDominators` rule — local thinning against each
+    partition's ``pool_size`` lowest rank-sum rows, then one exact
+    broadcast k-dominator-counting pass where survival is zero
+    k-dominators (a row never k-dominates itself, so its self count is
+    zero)."""
     nd = _norm_dims(dims)
     if not 1 <= k <= len(nd):
         raise ValueError(
@@ -1396,84 +1410,15 @@ def kdominant_skyline(
         )
     out_cols = df.columns
     prepped, prep_cols = _prep(df, dims)
-
-    def local_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pool_pts: np.ndarray | None = None
-        surv_frames: list[pd.DataFrame] = []
-        buf: list[pd.DataFrame] = []
-        buf_n = 0
-
-        def update_pool(pts: np.ndarray) -> None:
-            nonlocal pool_pts
-            cat = pts if pool_pts is None else np.concatenate([pool_pts, pts])
-            if cat.shape[0] > pool_size:
-                # lowest per-dim-rank sum = strongest k-dominators without
-                # letting one large-magnitude dim (s28's epoch-micros ship
-                # date) decide the whole pool
-                keep = np.argpartition(_rank_sum(cat), pool_size)[:pool_size]
-                cat = cat[keep]
-            pool_pts = np.ascontiguousarray(cat)
-
-        def thin(frame: pd.DataFrame, pts: np.ndarray) -> pd.DataFrame:
-            counts = count_kdominators_vs(pts, pool_pts, k)
-            keep = counts == 0
-            return frame if keep.all() else frame.loc[keep]
-
-        def compact() -> None:
-            nonlocal buf, buf_n
-            for frame in buf:
-                f2 = thin(frame, frame[prep_cols].to_numpy(dtype=np.float64))
-                if len(f2):
-                    surv_frames.append(f2)
-            buf, buf_n = [], 0
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            update_pool(pdf[prep_cols].to_numpy(dtype=np.float64))
-            buf.append(pdf)
-            buf_n += len(pdf)
-            if buf_n >= compact_rows:
-                compact()
-        compact()
-        if not surv_frames:
-            return
-        allrows = (
-            surv_frames[0]
-            if len(surv_frames) == 1
-            else pd.concat(surv_frames, ignore_index=True)
-        )
-        # re-test accumulated survivors against the finished pool (earlier
-        # compactions saw a weaker pool)
-        out = thin(allrows, allrows[prep_cols].to_numpy(dtype=np.float64))
-        if not out.empty:
-            yield out
-
     # (A whole-input driver fast path was A/B-probed here round 16 and
     # REVERTED: pool-thinning + k-dominator counting dominate at this
     # operator's shapes and parallelize across the scan — single-core
     # whole-input measured 1.9-2.0 s vs 1.5-1.6 s distributed at s28's
     # shape.)
-    phase1, cand_tbl, cand_arr = _collect_verified_candidates(
-        prepped, local_fn, prep_cols, "kdominant_skyline"
+    phase2 = _refute_candidates(
+        prepped, prep_cols, _KDominators(k), pool_size, "kdominant_skyline"
     )
-    if cand_tbl is None:
-        return phase1.select(*out_cols)
-    spark = phase1.sparkSession
-    bc = spark.sparkContext.broadcast(cand_arr)
-    totals = _broadcast_partial_counts(
-        prepped,
-        prep_cols,
-        lambda pts: count_kdominators_vs(bc.value, pts, k),
-        cand_arr.shape[0],
-        "__kdom",
-    )
-    return (
-        _keyed_candidates(spark, cand_tbl)
-        .join(F.broadcast(totals), "__cand_idx")
-        .where(F.col("__kdom") == 0)
-        .select(*out_cols)
-    )
+    return phase2.select(*out_cols)
 
 
 def skyline_layers(
@@ -1529,19 +1474,7 @@ def skyline_layers(
     out_cols = df.columns
     prepped, prep_cols = _prep(df, dims)
 
-    def local_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cur: pd.DataFrame | None = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            allrows = pdf if cur is None else pd.concat([cur, pdf], ignore_index=True)
-            pts = allrows[prep_cols].to_numpy(dtype=np.float64)
-            lay = onion_layers(pts, n_layers)
-            keep = lay > 0
-            cur = allrows if keep.all() else allrows.loc[keep]
-        if cur is not None and not cur.empty:
-            yield cur
-
+    local_fn = _local_skyline_iter(prep_cols, lambda p: onion_layers(p, n_layers) > 0)
     phase1 = _persist(_fanout(prepped).mapInPandas(local_fn, schema=prepped.schema))
     if phase1.count() > _VERIFY_MAX_ROWS:
         return _skyline_layers_peel(df, dims, n_layers, layer_col)

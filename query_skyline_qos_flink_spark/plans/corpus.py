@@ -613,11 +613,11 @@ WHERE NOT EXISTS (
     "dominance prunes the 5-D skyline to a handful; with full 5-of-5 "
     "dominance required, far more rows are incomparable and survive). "
     "k-dominance is NOT transitive, so the skyline's local-superset "
-    "merge facts don't apply; the operator reuses the reverse-skyline "
-    "filter-then-verify shape (lowest rank-sum running pool thins "
+    "merge facts don't apply; the operator shares the reverse "
+    "skyline's refutation path (lowest rank-sum running pool thins "
     "locally, one exact broadcast counting scan verifies; a row never "
-    "k-dominates itself or an exact duplicate, so no identity "
-    "bookkeeping) — operators/skyline.py::kdominant_skyline, "
+    "k-dominates itself or an exact duplicate, so its self count is "
+    "zero) — operators/skyline.py::kdominant_skyline (_KDominators), "
     "skyline_kernel.py::count_kdominators_vs. %% 31 input filter to "
     "bound the oracle's quadratic NOT EXISTS; timestamp dim goes "
     "through session.epoch_micros (dtype-dispatching, UTC)",
@@ -805,9 +805,10 @@ WHERE NOT EXISTS (
     "quadratic join: local thinning against each partition's "
     "nearest-to-q pool (a certified superset — dropping requires an "
     "actual refuter), then ONE exact counting scan of the full input "
-    "against the broadcast candidate matrix + half-widths; a candidate "
-    "survives iff its global refuter count equals its own "
-    "self-contribution — operators/skyline.py::reverse_skyline, "
+    "against the broadcast candidate matrix (half-widths |q - p| derived "
+    "per task); a candidate survives iff its global refuter count equals "
+    "its own self-contribution — operators/skyline.py::reverse_skyline "
+    "(_ReverseRefuters; the refutation path is shared with s28), "
     "skyline_kernel.py::count_refuters_vs. Self-exclusion is row "
     "identity: exact coordinate-duplicates refute each other (the oracle "
     "excludes by the p_partkey PK, same semantics)",

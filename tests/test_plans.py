@@ -246,8 +246,9 @@ def test_top_dominating_counting_scan_shape(spark):
 
 def test_reverse_skyline_counting_scan_shape(spark, monkeypatch):
     """Refuter counting is a mapInPandas over the scan + one tiny aggregate
-    on candidate index, with both assembly joins broadcast — never a
-    quadratic join against the corpus.  Since r16 the small-input default
+    on candidate index, with the one assembly join (keyed candidates
+    carrying their self counts x totals) broadcast — never a quadratic
+    join against the corpus.  Since r16 the small-input default
     finishes driver-side (local-relation plan); the distributed shape is
     asserted with the whole-input gate forced off."""
     from query_skyline_qos_flink_spark.operators import skyline as sky
@@ -257,7 +258,7 @@ def test_reverse_skyline_counting_scan_shape(spark, monkeypatch):
     assert "CartesianProduct" not in plan
     assert "MapInPandas" in plan
     assert "Exchange hashpartitioning(__cand_idx" in plan
-    assert "SortMergeJoin" not in plan  # totals/self joins stay broadcast
+    assert "SortMergeJoin" not in plan  # the totals join stays broadcast
     # default (driver) path: no exchange at all in the final plan
     monkeypatch.undo()
     plan = _plan(spark, "s27_reverse_skyline")
@@ -275,9 +276,9 @@ def test_bm25_topk_is_take_ordered_with_broadcast_df(spark):
 
 
 def test_kdominant_counting_scan_shape(spark):
-    """Same filter-then-verify contract as the reverse skyline: mapInPandas
-    over the scan, one tiny aggregate on candidate index, broadcast
-    assembly joins, no quadratic join."""
+    """Same refutation path as the reverse skyline: mapInPandas over the
+    scan, one tiny aggregate on candidate index, one broadcast assembly
+    join, no quadratic join."""
     plan = _plan(spark, "s28_kdominant_skyline")
     assert "CartesianProduct" not in plan
     assert "MapInPandas" in plan

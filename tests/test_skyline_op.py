@@ -578,18 +578,25 @@ def test_reverse_skyline_max_direction_inert(spark):
     assert a == b
 
 
-def test_reverse_skyline_compaction_path_matches_brute(spark):
-    """Force many buffer compactions + running-pool updates within one
-    partition (compact_rows << partition size, pool << n): the bounded-
+def test_reverse_skyline_compaction_path_matches_brute(spark, monkeypatch):
+    """Force the distributed refutation path (whole-input driver gate off)
+    and many buffer compactions + running-pool updates within one
+    partition (_COMPACT_ROWS << partition size, pool << n): the bounded-
     state local phase plus exact verify must still match brute force."""
-    import numpy as np
-    import pandas as pd
-
-    from query_skyline_qos_flink_spark.operators.skyline import reverse_skyline
+    from query_skyline_qos_flink_spark.operators import skyline as sky
     from query_skyline_qos_flink_spark.operators.skyline_kernel import (
         reverse_skyline_mask_brute,
     )
 
+    counted, real = [], sky._broadcast_partial_counts
+
+    def spy(*args):
+        counted.append(args[3])
+        return real(*args)
+
+    monkeypatch.setattr(sky, "_DRIVER_INPUT_MAX_BYTES", -1)
+    monkeypatch.setattr(sky, "_COMPACT_ROWS", 64)
+    monkeypatch.setattr(sky, "_broadcast_partial_counts", spy)
     rng = np.random.default_rng(29)
     n = 3000
     pdf = pd.DataFrame(
@@ -606,28 +613,25 @@ def test_reverse_skyline_compaction_path_matches_brute(spark):
     try:
         got = sorted(
             r.rid
-            for r in reverse_skyline(
-                df, ["x", "y"], q, pool_size=32, compact_rows=64
-            ).collect()
+            for r in sky.reverse_skyline(df, ["x", "y"], q, pool_size=32).collect()
         )
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
         else:
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    assert len(counted) == 1 and counted[0] > 0  # one counting verify ran
     exp_mask = reverse_skyline_mask_brute(pdf[["x", "y"]].to_numpy(), np.array(q))
     assert got == sorted(pdf.rid[exp_mask])
 
 
-def test_kdominant_skyline_matches_brute(spark):
-    import numpy as np
-    import pandas as pd
-
-    from query_skyline_qos_flink_spark.operators.skyline import kdominant_skyline
+def test_kdominant_skyline_matches_brute(spark, monkeypatch):
+    from query_skyline_qos_flink_spark.operators import skyline as sky
     from query_skyline_qos_flink_spark.operators.skyline_kernel import (
         kdominant_mask_brute,
     )
 
+    monkeypatch.setattr(sky, "_COMPACT_ROWS", 128)
     rng = np.random.default_rng(41)
     n = 2500
     pdf = pd.DataFrame(
@@ -643,12 +647,31 @@ def test_kdominant_skyline_matches_brute(spark):
     for k in (3, 4):
         got = sorted(
             r.rid
-            for r in kdominant_skyline(
-                df, ["x", "y", "z", "u"], k=k, pool_size=64, compact_rows=128
+            for r in sky.kdominant_skyline(
+                df, ["x", "y", "z", "u"], k=k, pool_size=64
             ).collect()
         )
         exp_mask = kdominant_mask_brute(pdf[["x", "y", "z", "u"]].to_numpy(), k)
         assert got == sorted(pdf.rid[exp_mask]), k
+
+
+def test_refutation_guard_names_operator(spark, monkeypatch):
+    """Past _VERIFY_MAX_ROWS phase-1 candidates, the reverse and k-dominant
+    skylines raise the one pre-collect guard of their shared refutation
+    path, each naming itself."""
+    from query_skyline_qos_flink_spark.operators import skyline as sky
+
+    rng = np.random.default_rng(5)
+    pts = rng.integers(0, 30, (400, 3)).astype(float)
+    pts[:2] = 10.0  # rows AT q are always reverse-skyline candidates
+    df = spark.createDataFrame(pd.DataFrame(pts, columns=["x", "y", "z"]))
+    monkeypatch.setattr(sky, "_DRIVER_INPUT_MAX_BYTES", -1)
+    monkeypatch.setattr(sky, "_VERIFY_MAX_ROWS", 1)
+    with pytest.raises(ValueError, match=r"^reverse_skyline: candidate set has"):
+        sky.reverse_skyline(df, ["x", "y", "z"], [10.0, 10.0, 10.0])
+    # k = d: the candidates hold the (nonempty) ordinary skyline
+    with pytest.raises(ValueError, match=r"^kdominant_skyline: candidate set has"):
+        sky.kdominant_skyline(df, ["x", "y", "z"], k=3)
 
 
 def test_kdominant_k_equals_d_is_skyline(spark):
