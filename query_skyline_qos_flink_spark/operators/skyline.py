@@ -100,9 +100,11 @@ _VERIFY_MAX_ROWS = 400_000
 # driver over the already-collected matrix, and the result re-enters Spark
 # as a local relation.  The distributed verify pass exists to spread
 # O(n x m) comparison volume across cores, but at m <= this bound the
-# whole candidate-vs-candidate block is <= ~2.7e8 boolean ops (~0.2 s on
-# one core) while the distributed form pays a dims-collect job plus a
-# python-worker broadcast pass per call — pure fixed latency at bench
+# block-pruned kernel finishes on one core in ~0.09 s (16,384 3-D
+# anti-correlated candidates), ~0.17 s (4-D thin slab) and ~0.35 s when
+# all 16,384 survive (3-D float simplex), while the distributed form
+# pays a dims-collect job plus a python-worker broadcast pass per call —
+# pure fixed latency at bench
 # scale and wasted scheduling at cluster scale (guide §1.2: remove
 # passes before tuning them).  Results are identical: same kernel, same
 # duplicate-retention policy (the skyline-merge monoid).  Read only by

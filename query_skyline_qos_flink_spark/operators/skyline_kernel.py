@@ -11,28 +11,45 @@ so every copy of a non-dominated point is retained — this matches the
 reference's BNL (``FlinkSkyline.java:407-444``) and the duckdb NOT-EXISTS
 oracle form.
 
-Algorithm: sorted forward-pass BNL.  A dominator always precedes its victim
-under either sort order used here, so one pass with a growing skyline set
-and no deletions replaces the reference's insert-and-evict BNL loop
-(``FlinkSkyline.java:417-444``).  Dominance is transitive, so testing
-against *all* earlier points (not only survivors) is sound for the
-intra-block step.
+Algorithm (``skyline_mask``, d >= 3): block-pruned BNL over k-d leaves,
+after the MBR-oriented approach (ICDE 2019, PAPERS.md).  Rows are sorted
+by coordinate sum, then:
+
+1. **elimination pre-pass** — the skyline of the ``_LEAF_ROWS``
+   smallest-sum rows drops every row it dominates (on uniform data this
+   removes almost everything; without it the leaves lose to plain BNL);
+2. **leaves** — the rest is cut into k-d leaves of at most
+   ``_LEAF_ROWS`` rows (halving at the median of the widest dimension),
+   and each leaf's local skyline is one pairwise block test, the
+   forward pass's intra-block step (a leaf never exceeds one block);
+3. **leaf pairs** — each leaf's survivors meet only the survivors of
+   leaves that could dominate one of them: the other leaf's survivor min
+   corner is <= this leaf's survivor max corner on every dimension and
+   < on one, and its min sum is below this leaf's max sum (strictly in
+   exact mode).  That test scans a sum-sorted prefix
+   (``dominated_mask_vs_sorted``).
+
+Exact by transitivity: every global skyline point survives its own leaf
+and lies inside that leaf's survivor bounds, so every dominated row meets
+a skyline dominator in some comparable leaf.  d == 2 takes the
+O(n log n) frontier rule instead (:func:`frontier_2d`).
 
 Two numeric modes, chosen per call:
 
 * **exact-sums fast path** — when every value is integral and small enough
   that coordinate sums are exact in float64 (always true for the
-  reference's integer-domain producers): sort by coordinate sum; dominance
-  reduces to ``all(<=) AND sum< `` (strictly smaller sum encodes 'exists
-  strictly smaller'; equal exact sums with all(<=) means equality).
+  reference's integer-domain producers): dominance reduces to
+  ``all(<=) AND sum<`` (strictly smaller sum encodes 'exists strictly
+  smaller'; equal exact sums with all(<=) means equality).
 * **general path** — arbitrary floats: computed sums can round two
   different sums to equality (hypothesis found this: ``4.0 + 1e-45 ==
-  4.0``), which breaks both the strict-sum test and sum-order tie
-  handling.  Instead sort LEXICOGRAPHICALLY (exact: a dominator is
-  strictly lex-smaller) and test ``all(<=) AND any(!=)`` (given all(<=),
-  'exists strictly smaller' is exactly 'not identical').  Float addition
-  is monotone, so ``fl_sum(p) <= fl_sum(q)`` still holds for dominators —
-  the NON-strict sum comparison stays valid as a prefix-pruning bound.
+  4.0``), so the test is ``all(<=) AND any(!=)`` (given all(<=), 'exists
+  strictly smaller' is exactly 'not identical').  Float addition is
+  monotone, so ``fl_sum(p) <= fl_sum(q)`` still holds for dominators: the
+  NON-strict sum comparison stays valid as a pruning bound, for both the
+  sky prefix and the leaf-pair test.  No step relies on a dominator
+  preceding its victim in sum order (the blocks test all pairs), so
+  computed-sum ties are harmless.
 
 All dominance tests run column-at-a-time over transposed contiguous
 vectors (column slices of row-major matrices are strided and memory-bound);
@@ -44,8 +61,12 @@ from __future__ import annotations
 
 import numpy as np
 
-# Candidate block size for the forward pass.
+# Block size of the skyband forward pass.
 _BLOCK = 2048
+# Max rows per k-d leaf of skyline_mask (and of its elimination
+# pre-pass's head); a leaf is one pairwise block, so its planes are views
+# of the call's scratch (keep <= _M_CHUNK).
+_LEAF_ROWS = 512
 # Sky-side / cand-side chunks for the dominance planes.  Round-15
 # retune after the scratch-plane refactor: the old 4096 x 32768 plane
 # (128 MB) streamed from RAM every pass; 2048 x 8192 (16 MB) keeps the
@@ -97,6 +118,12 @@ class _ChunkScratch:
         self.tmp = np.empty((m, k), dtype=bool)
         self.neq = np.empty((m, k), dtype=bool)
 
+    def planes(self, a: int, k: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(dom, tmp, neq) as CONTIGUOUS (a, k) views: a narrow [:a, :k]
+        slice of a wide plane strides one page per row."""
+        return tuple(p.reshape(-1)[: a * k].reshape(a, k)
+                     for p in (self.dom, self.tmp, self.neq))
+
 
 def _dom_chunk(sky_t: np.ndarray, ks: int, ke: int, ss: np.ndarray,
                C_t: np.ndarray, alive: np.ndarray, cs: np.ndarray,
@@ -106,8 +133,7 @@ def _dom_chunk(sky_t: np.ndarray, ks: int, ke: int, ss: np.ndarray,
     a, k = alive.size, ke - ks
     if scratch is None:
         scratch = _ChunkScratch(a, k)
-    dom = scratch.dom[:a, :k]
-    tmp = scratch.tmp[:a, :k]
+    dom, tmp, neq = scratch.planes(a, k)
     ca = cs[alive][:, None]
     if exact:
         np.less(ss[None, :], ca, out=dom)
@@ -119,7 +145,6 @@ def _dom_chunk(sky_t: np.ndarray, ks: int, ke: int, ss: np.ndarray,
     for j in range(d):
         np.less_equal(sky_t[j][ks:ke][None, :], C_t[j][alive][:, None], out=tmp)
         np.logical_and(dom, tmp, out=dom)
-    neq = scratch.neq[:a, :k]
     neq[:] = False
     for j in range(d):
         np.not_equal(sky_t[j][ks:ke][None, :], C_t[j][alive][:, None], out=tmp)
@@ -128,43 +153,18 @@ def _dom_chunk(sky_t: np.ndarray, ks: int, ke: int, ss: np.ndarray,
     return dom
 
 
-def dominated_mask(cand: np.ndarray, cand_sum: np.ndarray, sky: np.ndarray,
-                   sky_sum: np.ndarray, exact: bool = False) -> np.ndarray:
-    """Bool mask over ``cand``: dominated by some row of ``sky``.
-
-    Safe when ``sky`` contains the candidate rows themselves (self and
-    duplicate pairs are never 'strictly smaller somewhere')."""
-    m = cand.shape[0]
-    out = np.zeros(m, dtype=bool)
-    if sky.shape[0] == 0 or m == 0:
-        return out
-    sky_t = np.ascontiguousarray(sky.T)
-    scratch = _ChunkScratch(min(m, _M_CHUNK), min(sky.shape[0], _K_CHUNK))
-    for ms in range(0, m, _M_CHUNK):
-        me = min(m, ms + _M_CHUNK)
-        sub = np.zeros(me - ms, dtype=bool)
-        C_t = np.ascontiguousarray(cand[ms:me].T)
-        cs = cand_sum[ms:me]
-        for ks in range(0, sky.shape[0], _K_CHUNK):
-            alive = np.flatnonzero(~sub)
-            if alive.size == 0:
-                break
-            ke = min(ks + _K_CHUNK, sky.shape[0])
-            dom = _dom_chunk(sky_t, ks, ke, sky_sum[ks:ke], C_t, alive, cs, exact,
-                             scratch)
-            sub[alive] |= dom.any(axis=1)
-        out[ms:me] = sub
-    return out
-
-
 def dominated_mask_vs_sorted(cand: np.ndarray, cand_sum: np.ndarray,
                              sky_sorted: np.ndarray, sky_sum_sorted: np.ndarray,
-                             exact: bool = False) -> np.ndarray:
-    """Like :func:`dominated_mask` but ``sky`` is pre-sorted ascending by
-    (computed) coordinate sum, so each candidate chunk only scans the sky
-    prefix up to its max sum — strict prefix in exact mode, inclusive in
-    general mode (float addition monotonicity makes the non-strict bound
-    sound)."""
+                             exact: bool = False,
+                             scratch: "_ChunkScratch | None" = None) -> np.ndarray:
+    """Bool mask over ``cand``: dominated by some row of ``sky_sorted``,
+    which is sorted ascending by (computed) coordinate sum, so each
+    candidate chunk only scans the sky prefix up to its max sum — strict
+    prefix in exact mode, inclusive in general mode (float addition
+    monotonicity makes the non-strict bound sound).  Safe when the sky
+    contains the candidate rows themselves (self and duplicate pairs are
+    never 'strictly smaller somewhere').  A caller in a loop hoists one
+    :class:`_ChunkScratch` of at least (min(m, _M_CHUNK), min(k, _K_CHUNK))."""
     m = cand.shape[0]
     out = np.zeros(m, dtype=bool)
     if sky_sorted.shape[0] == 0 or m == 0:
@@ -172,9 +172,8 @@ def dominated_mask_vs_sorted(cand: np.ndarray, cand_sum: np.ndarray,
     order = np.argsort(cand_sum, kind="stable")
     side = "left" if exact else "right"
     sky_t = np.ascontiguousarray(sky_sorted.T)
-    scratch = _ChunkScratch(
-        min(m, _M_CHUNK), min(sky_sorted.shape[0], _K_CHUNK)
-    )
+    if scratch is None:
+        scratch = _ChunkScratch(min(m, _M_CHUNK), min(sky_sorted.shape[0], _K_CHUNK))
     for ms in range(0, m, _M_CHUNK):
         sel = order[ms:ms + _M_CHUNK]
         C_t = np.ascontiguousarray(cand[sel].T)
@@ -195,17 +194,16 @@ def dominated_mask_vs_sorted(cand: np.ndarray, cand_sum: np.ndarray,
     return out
 
 
-def _intra_dominated(A: np.ndarray, As: np.ndarray, exact: bool) -> np.ndarray:
+def _intra_dominated(A: np.ndarray, As: np.ndarray, exact: bool,
+                     scratch: _ChunkScratch) -> np.ndarray:
     """Pairwise within one block: mask of rows dominated by another row.
 
-    Same ``out=``-into-scratch discipline as :func:`_dom_chunk` (the
-    blocks are ≤ ``_M_CHUNK`` square, so the planes are smaller, but the
-    per-dim comparison temporaries churn the allocator identically)."""
-    d = A.shape[1]
-    n = A.shape[0]
+    Same ``out=``-into-scratch discipline as :func:`_dom_chunk`: the
+    (n, n) planes are views of the caller's scratch (a block is
+    ≤ ``_LEAF_ROWS`` rows, so they fit)."""
+    n, d = A.shape
     A_t = np.ascontiguousarray(A.T)
-    scratch = _ChunkScratch(n, n)
-    dom, tmp = scratch.dom, scratch.tmp
+    dom, tmp, neq = scratch.planes(n, n)
     if exact:
         np.less(As[:, None], As[None, :], out=dom)  # (l, k): sum_l < sum_k
         for j in range(d):
@@ -216,7 +214,6 @@ def _intra_dominated(A: np.ndarray, As: np.ndarray, exact: bool) -> np.ndarray:
     for j in range(d):
         np.less_equal(A_t[j][:, None], A_t[j][None, :], out=tmp)
         np.logical_and(dom, tmp, out=dom)
-    neq = scratch.neq
     neq[:] = False
     for j in range(d):
         np.not_equal(A_t[j][:, None], A_t[j][None, :], out=tmp)
@@ -278,41 +275,69 @@ def skyline_mask(points: np.ndarray) -> np.ndarray:
         return keep
     sums = vp.sum(axis=1)
     exact = sums_exact(vp)
-    if exact:
-        order = np.argsort(sums, kind="stable")
-    else:
-        # lexicographic: exact order, dominators strictly precede victims
-        order = np.lexsort(vp.T[::-1])
+    # rows in ascending-sum order: the pre-pass head is a prefix, and any
+    # id subset taken in id order is a sum-sorted sky
+    order = np.argsort(sums, kind="stable")
     sp = vp[order]
     ssum = sums[order]
     # exact f32 fast path for the comparison kernels (sums stay f64)
     sp32 = exact_f32(sp)
     work = sp32 if sp32 is not None else sp
-
-    nv = sp.shape[0]
-    keep_sorted = np.zeros(nv, dtype=bool)
-    sky_blocks: list[np.ndarray] = []
-    sum_blocks: list[np.ndarray] = []
-    sky = np.empty((0, d), dtype=work.dtype)
-    sky_sum = np.empty((0,), dtype=np.float64)
-    for i in range(0, nv, _BLOCK):
-        cand = work[i:i + _BLOCK]
-        csum = ssum[i:i + _BLOCK]
-        dominated = dominated_mask(cand, csum, sky, sky_sum, exact=exact)
-        alive = np.flatnonzero(~dominated)
-        if alive.size:
-            A = cand[alive]
-            surv = alive[~_intra_dominated(A, csum[alive], exact)]
-            if surv.size:
-                keep_sorted[i + surv] = True
-                sky_blocks.append(cand[surv])
-                sum_blocks.append(csum[surv])
-                sky = np.concatenate(sky_blocks, axis=0) if len(sky_blocks) > 1 else sky_blocks[0]
-                sky_sum = (
-                    np.concatenate(sum_blocks) if len(sum_blocks) > 1 else sum_blocks[0]
-                )
-    keep[vidx[order[keep_sorted.nonzero()[0]]]] = True
+    nv = work.shape[0]
+    scratch = _ChunkScratch(min(nv, _M_CHUNK), min(nv, _K_CHUNK))
+    # elimination pre-pass: the skyline of the _LEAF_ROWS smallest-sum
+    # rows drops every row it dominates
+    head = np.arange(min(nv, _LEAF_ROWS))
+    head = head[~_intra_dominated(work[head], ssum[head], exact, scratch)]
+    rest = np.flatnonzero(
+        ~dominated_mask_vs_sorted(work, ssum, work[head], ssum[head], exact, scratch)
+    )
+    # each leaf's local survivors, their corners and sum range
+    leaves = [ix[~_intra_dominated(work[ix], ssum[ix], exact, scratch)]
+              for ix in _kd_leaves(work, rest)]
+    cat = np.concatenate(leaves)
+    sizes = [ix.size for ix in leaves]
+    starts = np.cumsum([0] + sizes[:-1])
+    lo = np.minimum.reduceat(work[cat], starts)
+    hi = np.maximum.reduceat(work[cat], starts)
+    smin = np.minimum.reduceat(ssum[cat], starts)
+    smax = np.maximum.reduceat(ssum[cat], starts)
+    by_sum = np.argsort(cat)
+    surv = cat[by_sum]
+    surv_leaf = np.repeat(np.arange(len(leaves)), sizes)[by_sum]
+    below = np.less if exact else np.less_equal
+    dead = np.zeros(nv, dtype=bool)
+    for li, ix in enumerate(leaves):
+        # leaves whose survivors could dominate one of this leaf's: a
+        # dominator is <= everywhere and < somewhere, so its leaf's min
+        # corner is too (and its sum is at most the victim's)
+        near = ((lo <= hi[li]).all(axis=1) & (lo < hi[li]).any(axis=1)
+                & below(smin, smax[li]))
+        near[li] = False
+        sky = surv[near[surv_leaf]]
+        if sky.size:
+            dead[ix] = dominated_mask_vs_sorted(work[ix], ssum[ix], work[sky], ssum[sky],
+                                                exact, scratch)
+    keep[vidx[order[surv[~dead[surv]]]]] = True
     return keep
+
+
+def _kd_leaves(pts: np.ndarray, idx: np.ndarray) -> list[np.ndarray]:
+    """Row ids ``idx`` of ``pts`` cut into k-d leaves of at most
+    ``_LEAF_ROWS`` rows, each split halving at the median of the widest
+    dimension."""
+    leaves, todo = [], [idx]
+    while todo:
+        ix = todo.pop()
+        if ix.size <= _LEAF_ROWS:
+            leaves.append(ix)
+            continue
+        sub = pts[ix]
+        j = int(np.argmax(sub.max(axis=0) - sub.min(axis=0)))
+        half = ix.size // 2
+        part = np.argpartition(sub[:, j], half)
+        todo += [ix[part[:half]], ix[part[half:]]]
+    return leaves
 
 
 def onion_layers(points: np.ndarray, max_layers: int) -> np.ndarray:
@@ -335,20 +360,6 @@ def onion_layers(points: np.ndarray, max_layers: int) -> np.ndarray:
         layers[remaining[mask]] = layer
         remaining = remaining[~mask]
     return layers
-
-
-def skyline_update(sky: np.ndarray | None, batch: np.ndarray) -> np.ndarray:
-    """Merge ``batch`` into an existing skyline ``sky`` (or None) and return
-    the new skyline array.  Used by the streaming/incremental path:
-    skyline-merge is associative and commutative (skyline(A ∪ B) =
-    skyline(skyline(A) ∪ skyline(B))), the structural fact the reference's
-    two-phase topology relies on (``FlinkSkyline.java:162-174``)."""
-    if sky is None or sky.shape[0] == 0:
-        allpts = np.asarray(batch, dtype=np.float64)
-    else:
-        allpts = np.concatenate([np.asarray(sky, dtype=np.float64),
-                                 np.asarray(batch, dtype=np.float64)], axis=0)
-    return allpts[skyline_mask(allpts)]
 
 
 def skyline_mask_brute(points: np.ndarray) -> np.ndarray:

@@ -103,6 +103,15 @@ def test_cross_scope_twin_eviction_keeps_live_cache(spark):
     caching._unpersist("scope_b", b)
 
 
+def _skip_without_preload_daemon():
+    import os
+
+    import pytest
+
+    if os.environ.get("SPARK_GRAFT_NO_PRELOAD_DAEMON"):
+        pytest.skip("preload daemon disabled via env")
+
+
 def test_preload_daemon_marker_reaches_workers(spark):
     """The session wires spark.python.daemon.module to the preloading
     daemon (spark_daemon.py); workers forked from it inherit the marker
@@ -111,10 +120,7 @@ def test_preload_daemon_marker_reaches_workers(spark):
 
     import pandas as pd
 
-    if os.environ.get("SPARK_GRAFT_NO_PRELOAD_DAEMON"):
-        import pytest
-
-        pytest.skip("preload daemon disabled via env")
+    _skip_without_preload_daemon()
     assert (
         spark.conf.get("spark.python.daemon.module", "unset")
         == "query_skyline_qos_flink_spark.spark_daemon"
@@ -133,3 +139,75 @@ def test_preload_daemon_marker_reaches_workers(spark):
         .collect()
     )
     assert got[0][0] == 1
+
+
+def _one_task(spark, fn):
+    """Run ``fn()`` once inside a Python worker task; return its int."""
+    import pandas as pd
+
+    def probe(batches):
+        for _pdf in batches:
+            yield pd.DataFrame({"v": [int(fn())]})
+
+    return spark.range(1, numPartitions=1).mapInPandas(probe, schema="v long").collect()[0][0]
+
+
+def test_preload_daemon_skips_unchanged_zip_rereads(spark):
+    """Every task runs importlib.invalidate_caches() (pyspark's
+    setup_spark_files); a worker forked from spark_daemon.py re-reads no
+    unchanged archive's zip directory there."""
+    _skip_without_preload_daemon()
+
+    def reads_across_invalidate():
+        import importlib
+        import zipimport
+
+        stock = zipimport._read_directory
+        calls = []
+
+        def counting(path):
+            calls.append(path)
+            return stock(path)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = stock
+        return len(calls)
+
+    assert _one_task(spark, reads_across_invalidate) == 0
+
+
+def test_preload_daemon_rereads_rewritten_zip(spark, tmp_path):
+    """A zip rewritten inside a task is still re-read by
+    importlib.invalidate_caches(): its second module imports."""
+    _skip_without_preload_daemon()
+    import uuid
+
+    tag = uuid.uuid4().hex[:12]
+    path = str(tmp_path / f"mods_{tag}.zip")
+
+    def import_after_rewrite():
+        import importlib
+        import sys
+        import zipfile
+
+        first, second = f"zmod_a_{tag}", f"zmod_b_{tag}"
+        with zipfile.ZipFile(path, "w") as z:
+            z.writestr(f"{first}.py", "V = 1\n")
+        sys.path.insert(0, path)
+        try:
+            a = importlib.import_module(first)
+            with zipfile.ZipFile(path, "w") as z:
+                z.writestr(f"{first}.py", "V = 1\n")
+                z.writestr(f"{second}.py", "V = 2\n")
+            importlib.invalidate_caches()
+            b = importlib.import_module(second)
+            return a.V * 10 + b.V
+        finally:
+            sys.path.remove(path)
+            sys.modules.pop(first, None)
+            sys.modules.pop(second, None)
+
+    assert _one_task(spark, import_after_rewrite) == 12

@@ -9,7 +9,6 @@ import pytest
 from query_skyline_qos_flink_spark.operators.skyline_kernel import (
     skyline_mask,
     skyline_mask_brute,
-    skyline_update,
 )
 
 
@@ -36,6 +35,18 @@ def test_nan_rows_excluded():
     assert skyline_mask(pts).tolist() == [False, True, False]
 
 
+def test_equal_float_sums_across_leaves(monkeypatch):
+    """General float mode: a dominator whose computed sum rounds equal to
+    its victim's (4.0 + 1e-45 == 4.0) is still tested when the two sit
+    in different k-d leaves, whatever their input order."""
+    from query_skyline_qos_flink_spark.operators import skyline_kernel
+
+    monkeypatch.setattr(skyline_kernel, "_LEAF_ROWS", 1)
+    pts = np.array([[4.0, 1e-45, 0.0], [4.0, 0.0, 0.0]])
+    assert skyline_mask(pts).tolist() == [False, True]
+    assert skyline_mask(pts[::-1]).tolist() == [True, False]
+
+
 def test_idempotence_and_containment():
     rng = np.random.default_rng(9)
     pts = rng.random((4000, 3))
@@ -48,9 +59,10 @@ def test_idempotence_and_containment():
 def test_incremental_update_equals_batch():
     rng = np.random.default_rng(11)
     pts = rng.random((5000, 3))
-    sky = None
+    sky = pts[:0]
     for i in range(0, 5000, 700):
-        sky = skyline_update(sky, pts[i:i + 700])
+        union = np.concatenate([sky, pts[i:i + 700]], axis=0)
+        sky = union[skyline_mask(union)]
     ref = pts[skyline_mask(pts)]
     assert sorted(map(tuple, sky)) == sorted(map(tuple, ref))
 

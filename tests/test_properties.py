@@ -8,7 +8,6 @@ from hypothesis import given, settings, strategies as st
 from query_skyline_qos_flink_spark.operators.skyline_kernel import (
     skyline_mask,
     skyline_mask_brute,
-    skyline_update,
 )
 
 
@@ -35,17 +34,82 @@ def test_kernel_equals_bruteforce(rows):
     assert (skyline_mask(pts) == skyline_mask_brute(pts)).all()
 
 
+def _leafy_points(d):
+    value = st.one_of(
+        st.integers(min_value=0, max_value=6).map(float),
+        st.sampled_from([0.0, -0.0]),
+        st.floats(min_value=-50, max_value=50, allow_nan=False, width=32),
+    )
+    # a NaN goes into column c of a row when c < d (about 1 row in 5)
+    row = st.tuples(st.lists(value, min_size=d, max_size=d),
+                    st.integers(min_value=0, max_value=4 * d))
+    return st.tuples(st.lists(row, min_size=1, max_size=400),
+                     st.sampled_from(["mixed", "integral", "duplicates"]))
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.integers(min_value=3, max_value=5).flatmap(_leafy_points))
+def test_kernel_equals_bruteforce_across_leaves(case):
+    """skyline_mask with 4-row k-d leaves (so up to 400 rows cross ~100
+    leaves and the elimination pre-pass) equals brute force: ties, +-0.0,
+    NaN rows, all-duplicates, exact-sum and general float modes."""
+    from unittest import mock
+
+    from query_skyline_qos_flink_spark.operators import skyline_kernel
+
+    rows, shape = case
+    pts = np.asarray([r for r, _ in rows], dtype=np.float64)
+    if shape == "integral":
+        pts = np.abs(np.round(pts)) % 5  # a small domain: many ties
+    elif shape == "duplicates":
+        pts = np.repeat(pts[:1], len(pts), axis=0)
+    for i, (_, c) in enumerate(rows):
+        if c < pts.shape[1]:
+            pts[i, c] = np.nan
+    with mock.patch.object(skyline_kernel, "_LEAF_ROWS", 4):
+        assert (skyline_mask(pts) == skyline_mask_brute(pts)).all()
+
+
+def _anti_correlated(rng, n, d, eps, domain=10000.0):
+    """The reference producer's anti-correlated shape: a random direction
+    scaled onto the hyperplane sum(v) ~ d * domain / 2, floored."""
+    mean, slack = domain / 2.0 * d, eps * domain * d
+    target = rng.random(n) * (2 * slack) + (mean - slack)
+    unit = rng.random((n, d))
+    return np.clip(np.floor(unit * (target / unit.sum(axis=1))[:, None]), 0.0, domain)
+
+
+def test_kernel_equals_bruteforce_bench_shapes():
+    """Fixed-seed parity at the benchmark's shapes, a few thousand rows
+    each: 3-D and 4-D anti-correlated (4-D floors ~22% of rows to the
+    origin) and 5-D uniform, at the default and at a small leaf size."""
+    from unittest import mock
+
+    from query_skyline_qos_flink_spark.operators import skyline_kernel
+
+    rng = np.random.default_rng(2019)
+    shapes = [
+        _anti_correlated(rng, 4000, 3, 0.05),
+        _anti_correlated(rng, 3000, 4, 0.9),
+        np.floor(rng.random((4000, 5)) * 10001.0),
+    ]
+    for pts in shapes:
+        ref = skyline_mask_brute(pts)
+        assert (skyline_mask(pts) == ref).all()
+        with mock.patch.object(skyline_kernel, "_LEAF_ROWS", 64):
+            assert (skyline_mask(pts) == ref).all()
+
+
 @settings(max_examples=40, deadline=None)
 @given(points_strategy, st.integers(min_value=1, max_value=7))
 def test_partition_invariance(rows, parts):
     pts = np.asarray(rows, dtype=np.float64)
     ref = sorted(map(tuple, pts[skyline_mask(pts)]))
     assign = np.arange(len(pts)) % parts
-    sky = None
+    sky = pts[:0]
     for p in range(parts):
-        sub = pts[assign == p]
-        if len(sub):
-            sky = skyline_update(sky, sub)
+        union = np.concatenate([sky, pts[assign == p]], axis=0)
+        sky = union[skyline_mask(union)]
     assert sorted(map(tuple, sky)) == ref
 
 
